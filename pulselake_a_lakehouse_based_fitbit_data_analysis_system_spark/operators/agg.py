@@ -4,7 +4,7 @@
   ``Gold/06-gold.py:93-95``): min/avg/max/count per session key.
   Catalyst plans it as partial (map-side) + final hash aggregation, so
   the shuffle carries one row per (key, partition).
-- ``rollup_stats`` / ``cube_stats`` — the dashboards' "by age × by
+- ``rollup_stats`` — the dashboards' "by age × by
   state × by gender" slices (SURVEY §2.4 note) as one pass instead of
   N separate groupBys.
 - ``sessionize`` — gaps-and-islands sessionization (lag + cumulative
@@ -42,11 +42,6 @@ def rollup_stats(
 ) -> DataFrame:
     """GROUP BY ROLLUP(dims) — hierarchical subtotals in one shuffle."""
     return df.rollup(*dims).agg(*aggs)
-
-
-def cube_stats(df: DataFrame, dims: Sequence[str], aggs: Sequence[Column]) -> DataFrame:
-    """GROUP BY CUBE(dims) — all dimension subsets in one pass."""
-    return df.cube(*dims).agg(*aggs)
 
 
 def sessionize(

@@ -1,8 +1,7 @@
 """Exact deduplication and CDC latest-record selection.
 
 Batch forms of the reference's two dedup operators (SURVEY §2.5):
-- W1 watermarked streaming dedup → ``distinct_rows`` /
-  ``deterministic_dedup`` (batch) and ``streaming.dedup`` (stream).
+- W1 watermarked streaming dedup → ``deterministic_dedup`` (batch) and ``streaming.dedup`` (stream).
 - W2 CDC latest-record ranking (``Silver/05-silver.py:24-32``) →
   ``latest_by_key``. The reference uses ``rank()`` — which keeps BOTH
   rows on a timestamp tie and then breaks its own MERGE with a
@@ -22,12 +21,6 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-
-def distinct_rows(df: DataFrame, subset: Sequence[str] | None = None) -> DataFrame:
-    """``dropDuplicates`` — nondeterministic about WHICH row survives for
-    a given key; fine when rows are identical (full-row distinct)."""
-    return df.dropDuplicates(list(subset)) if subset else df.distinct()
 
 
 def deterministic_dedup(

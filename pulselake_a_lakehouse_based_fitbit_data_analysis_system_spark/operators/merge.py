@@ -643,6 +643,19 @@ class TableStore:
     of the partition — a hot single key rewrites ONE file, not a ~3 TB
     bucket. Non-integer keys and escape-encoded partition values fall
     back to whole-partition rewrites (conservative, never incorrect).
+
+    **Commit anatomy.** Every partition-scoped commit (pruned merge,
+    delete / update / replace_where, optimize, delete_vectored) and
+    the rebase of one are finished by ``_commit_version``: it moves
+    the rewritten partitions in from scratch, hard-links the rest of
+    the parent, then writes the per-version files — ``_FILESTATS.json``
+    (merge-key bounds per file), ``_BLOOM.*`` / ``_MINMAX.*``
+    (skipping sidecars), ``_DV.json`` (deletion vector),
+    ``_SCHEMA.json``, ``_COLMAP.json`` (column mapping), ``_OP.json``
+    (commit info with ``n_files`` / ``bytes``), any staged change
+    records (``_CDF_STAGED``) and ``_REWRITTEN.json`` (partitions
+    touched, for partition-level conflict detection) — before the
+    ``_CURRENT`` pointer flips.
     """
 
     def __init__(
@@ -774,17 +787,23 @@ class TableStore:
                         f"no longer current ({cur_base!r} is) — another "
                         "writer committed; re-run against the new version"
                     )
-            # ledger the OUTGOING current before the flip (it was
-            # current, hence committed — heals a predecessor's crash
-            # between ITS flip and ITS ledger append), then the new
-            # dir after (see the staged-CDF protocol note)
-            if cur_base is not None:
-                self._ledger_record(name, cur_base)
-            tmp_ptr = self._pointer(name) + ".tmp"
-            with open(tmp_ptr, "w") as f:
-                f.write(version_dir)
-            os.replace(tmp_ptr, self._pointer(name))
-            self._ledger_record(name, version_dir)
+            self._flip_pointer(name, cur_base, version_dir)
+
+    def _flip_pointer(
+        self, name: str, cur_base: str | None, version_dir: str
+    ) -> None:
+        """Point the table at ``version_dir`` (call under the commit
+        lock). The OUTGOING current is ledgered before the flip (it
+        was current, hence committed — heals a predecessor's crash
+        between ITS flip and ITS ledger append), the new dir after
+        (see the staged-CDF protocol note)."""
+        if cur_base is not None:
+            self._ledger_record(name, cur_base)
+        tmp_ptr = self._pointer(name) + ".tmp"
+        with open(tmp_ptr, "w") as f:
+            f.write(version_dir)
+        os.replace(tmp_ptr, self._pointer(name))
+        self._ledger_record(name, version_dir)
 
     # --- partition-level conflict detection (the Delta logical-
     # conflict analog: disjoint writers both commit) -----------------------
@@ -811,10 +830,9 @@ class TableStore:
         rec = {"rewritten": sorted(rewritten), "based_on": based_on}
         if neutral:
             rec["neutral"] = True
-        tmp = os.path.join(version_full, self._REWRITTENFILE + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, os.path.join(version_full, self._REWRITTENFILE))
+        self._write_json_sidecar(
+            os.path.join(version_full, self._REWRITTENFILE), rec
+        )
 
     def _chain_rewritten(
         self, from_version: str, to_version: str
@@ -874,13 +892,7 @@ class TableStore:
             cur = self.current_path(name)
             cur_base = os.path.basename(cur) if cur else None
             if cur_base == based_on:
-                if cur_base is not None:
-                    self._ledger_record(name, cur_base)
-                tmp_ptr = self._pointer(name) + ".tmp"
-                with open(tmp_ptr, "w") as f:
-                    f.write(version_dir)
-                os.replace(tmp_ptr, self._pointer(name))
-                self._ledger_record(name, version_dir)
+                self._flip_pointer(name, cur_base, version_dir)
                 return version_dir
             ours_full = os.path.join(self.root, version_dir)
             inter = (
@@ -950,28 +962,10 @@ class TableStore:
             rebase_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
             rebase_full = os.path.join(self.root, rebase_dir)
             os.makedirs(rebase_full)
-            for entry in os.listdir(cur):
-                src_path = os.path.join(cur, entry)
-                if (
-                    not os.path.isdir(src_path)
-                    or entry in rewritten
-                    # cur's staged change records (if any survive a
-                    # crash unpublished) belong to CUR's commit — the
-                    # publish pass finds them there; carrying them
-                    # here would double-feed them under a new owner
-                    or entry == self._STAGED_DIR
-                ):
-                    continue
-                os.makedirs(os.path.join(rebase_full, entry))
-                for fname in os.listdir(src_path):
-                    os.link(
-                        os.path.join(src_path, fname),
-                        os.path.join(rebase_full, entry, fname),
-                    )
-            for entry in rewritten:
-                src_path = os.path.join(ours_full, entry)
-                if os.path.isdir(src_path):
-                    os.rename(src_path, os.path.join(rebase_full, entry))
+            # cur's partitions, ours for the partitions we rewrote (a
+            # rewritten partition ours emptied is taken from neither)
+            self._move_partitions(ours_full, rebase_full, rewritten)
+            self._link_parent(cur, rebase_full, dict.fromkeys(rewritten))
             # OUR staged change records ride the commit wherever it
             # lands: move them into the rebase dir and re-own the
             # manifest (ours_full is about to be rmtree'd)
@@ -986,64 +980,9 @@ class TableStore:
                 with open(ours_man) as f:
                     man = json.load(f)
                 man["owner"] = rebase_dir
-                tmp = os.path.join(
-                    rebase_full, self._STAGED_MANIFEST + ".tmp"
+                self._write_json_sidecar(
+                    os.path.join(rebase_full, self._STAGED_MANIFEST), man
                 )
-                with open(tmp, "w") as f:
-                    json.dump(man, f)
-                os.replace(
-                    tmp, os.path.join(rebase_full, self._STAGED_MANIFEST)
-                )
-            # merge-key stats: union both carries (rel paths are
-            # uuid-unique per file; _write_file_stats walks the REAL
-            # dir listing, so stale entries are simply never consulted)
-            stats_cur = self._load_file_stats(cur)
-            stats_ours = self._load_file_stats(ours_full)
-            key = (stats_ours or {}).get("key") or (stats_cur or {}).get(
-                "key"
-            )
-            if key is not None:
-                carry: dict = {}
-                for s in (stats_cur, stats_ours):
-                    if s is not None and s.get("key") == key:
-                        carry.update(s.get("files") or {})
-                self._write_file_stats(rebase_full, key, carry=carry)
-            # per-column skipping sidecars: inode-keyed carry keeps
-            # exactly the entries whose files made it into the rebase
-            self._carry_bloom_sidecars(cur, rebase_full)
-            self._carry_bloom_sidecars(ours_full, rebase_full)
-            # deletion vectors carry EXACTLY — dropping an entry would
-            # resurrect deleted rows. cur's entries carry inode-
-            # validated for the hard-linked partitions; ours' entries
-            # under the partitions we MOVED in transfer verbatim (the
-            # os.rename emptied ours_full, so samefile cannot see
-            # them — but those files came from ours by construction).
-            # Ours' entries OUTSIDE its rewritten set are dropped:
-            # those partitions came from cur, whose own carry is the
-            # valid one (ours' copies are redundant or stale).
-            self._carry_dv(cur, rebase_full)
-            ours_dv = self._load_dv(ours_full)
-            moved = {
-                rel: rows
-                for rel, rows in ours_dv.items()
-                if rel.split("/", 1)[0] in rewritten
-            }
-            if moved:
-                merged_dv = self._load_dv(rebase_full)
-                for rel, rows in moved.items():
-                    merged_dv[rel] = sorted(
-                        set(merged_dv.get(rel, [])) | set(rows)
-                    )
-                self._write_dv(rebase_full, merged_dv)
-            try:
-                shutil.copyfile(
-                    os.path.join(ours_full, self._SCHEMAFILE),
-                    os.path.join(rebase_full, self._SCHEMAFILE),
-                )
-            except OSError:
-                pass
-            # proven equal to cur's above, so either parent's copy works
-            self._carry_colmap(ours_full, rebase_full)
             # fresh commit info, NOT a copy of ours': the rebase dir's
             # operationMetrics (n_files/bytes) must describe the
             # merged dir — cur's partitions plus ours — and the
@@ -1056,14 +995,40 @@ class TableStore:
                     ours_rec = json.load(f)
             except Exception:
                 ours_rec = {}
-            ours_op = str(ours_rec.get("op", "merge"))
             extras = {
                 k: v
                 for k, v in ours_rec.items()
                 if k not in ("op", "ts", "n_files", "bytes", "rebased_onto")
             }
-            self._write_op(
-                rebase_full, ours_op, rebased_onto=cur_base, **extras
+            # deletion vectors carry EXACTLY — dropping an entry would
+            # resurrect deleted rows. cur's entries carry inode-
+            # validated for the hard-linked partitions; ours' entries
+            # under the partitions we MOVED in transfer verbatim (the
+            # os.rename emptied ours_full, so samefile cannot see
+            # them — but those files came from ours by construction).
+            # Ours' entries OUTSIDE its rewritten set are dropped:
+            # those partitions came from cur, whose own carry is the
+            # valid one (ours' copies are redundant or stale).
+            moved_dv = {
+                rel: rows
+                for rel, rows in self._load_dv(ours_full).items()
+                if rel.split("/", 1)[0] in rewritten
+            }
+            stats_key = (self._load_file_stats(ours_full) or {}).get(
+                "key"
+            ) or (self._load_file_stats(cur) or {}).get("key")
+            # the schema is ours' (proven field-equal to cur's above);
+            # the column mapping is cur's (proven equal to ours')
+            self._write_version_files(
+                rebase_full,
+                cur,
+                str(ours_rec.get("op", "merge")),
+                stats_key=stats_key,
+                schema=ours_full,
+                dv_add=moved_dv,
+                also_from=ours_full,
+                rebased_onto=cur_base,
+                **extras,
             )
             # a rebased commit keeps its content-neutrality: the
             # compacted partitions' content equals cur's for them (the
@@ -1080,14 +1045,193 @@ class TableStore:
                 rebase_full, rewritten, cur_base, neutral=ours_neutral
             )
             shutil.rmtree(ours_full, ignore_errors=True)
-            if cur_base is not None:
-                self._ledger_record(name, cur_base)
-            tmp_ptr = self._pointer(name) + ".tmp"
-            with open(tmp_ptr, "w") as f:
-                f.write(rebase_dir)
-            os.replace(tmp_ptr, self._pointer(name))
-            self._ledger_record(name, rebase_dir)
+            self._flip_pointer(name, cur_base, rebase_dir)
             return rebase_dir
+
+    # --- building a version (the one commit path) -------------------------
+
+    @staticmethod
+    def _move_partitions(
+        src_full: str, dst_full: str, only: set[str] | None = None
+    ) -> set[str]:
+        """Move partition dirs of ``src_full`` (a scratch write, or a
+        version being rebased) into ``dst_full``; ``only`` restricts
+        the move to those names. Returns the names moved."""
+        moved = {
+            e
+            for e in os.listdir(src_full)
+            if os.path.isdir(os.path.join(src_full, e))
+            and (only is None or e in only)
+        }
+        for e in moved:
+            os.rename(os.path.join(src_full, e), os.path.join(dst_full, e))
+        return moved
+
+    def _is_version_file(self, fname: str) -> bool:
+        """Per-version metadata that every commit writes afresh (see
+        ``_write_version_files``) instead of linking the parent's."""
+        return fname in (
+            self._OPFILE,
+            self._DVFILE,
+            self._REWRITTENFILE,
+            self._STAGED_MANIFEST,
+            self._FILESTATS,
+            self._SCHEMAFILE,
+            self._COLMAPFILE,
+        ) or fname.startswith((self._BLOOM_PREFIX, self._MINMAX_PREFIX))
+
+    def _link_parent(
+        self,
+        parent: str,
+        full: str,
+        replaced: dict[str, set[str] | None],
+        root_files: bool = False,
+    ) -> None:
+        """Hard-link ``parent``'s partition dirs into ``full`` —
+        byte-identical, zero copy; versions are immutable, so sharing
+        inodes is safe. ``replaced`` names the partitions the new
+        version does not take whole: ``None`` takes none of its files
+        (rewritten or emptied), a set takes every file but those (the
+        hit files of a file-pruned rewrite) and their checksums.
+        ``root_files`` also links the parent's top-level files (the
+        data of an unpartitioned table) for a commit that rewrote
+        nothing. The parent's staged change records belong to ITS
+        commit and are never carried."""
+        for entry in os.listdir(parent):
+            src = os.path.join(parent, entry)
+            if not os.path.isdir(src):
+                if root_files and not self._is_version_file(entry):
+                    os.link(src, os.path.join(full, entry))
+                continue
+            hit = replaced.get(entry, set())
+            if entry == self._STAGED_DIR or hit is None:
+                continue
+            for base, _dirs, files in os.walk(src):
+                dst = os.path.normpath(
+                    os.path.join(full, entry, os.path.relpath(base, src))
+                )
+                keep = [
+                    f
+                    for f in files
+                    if f not in hit
+                    and not (
+                        f.startswith(".")
+                        and f.endswith(".crc")
+                        and f[1:-4] in hit
+                    )
+                ]
+                if keep:
+                    os.makedirs(dst, exist_ok=True)
+                for f in keep:
+                    os.link(os.path.join(base, f), os.path.join(dst, f))
+
+    def _write_version_files(
+        self,
+        full: str,
+        parent: str,
+        op: str,
+        *,
+        stats_key: str | None,
+        schema: DataFrame | str,
+        colmap: dict | None = None,
+        dv_add: dict | None = None,
+        also_from: str | None = None,
+        **details,
+    ) -> None:
+        """The per-version metadata of a version assembled from
+        ``parent``: merge-key file stats and the bloom/min-max
+        sidecars carry the entries of files still linked (plus, for a
+        rebase, ``also_from``'s), the deletion vector carries exactly
+        and unions ``dv_add``, the schema is ``schema``'s (a frame, or
+        a version dir whose sidecar is copied), the column mapping is
+        ``colmap`` or the parent's, and the commit info goes last so
+        its ``n_files``/``bytes`` describe the finished dir."""
+        carriers = [parent] if also_from is None else [parent, also_from]
+        if stats_key is not None:
+            self._write_file_stats(full, stats_key, *carriers)
+        for src in carriers:
+            self._carry_bloom_sidecars(src, full)
+        self._carry_dv(parent, full, add=dv_add)
+        if isinstance(schema, DataFrame):
+            self._write_schema(full, schema)
+        elif os.path.exists(os.path.join(schema, self._SCHEMAFILE)):
+            shutil.copyfile(
+                os.path.join(schema, self._SCHEMAFILE),
+                os.path.join(full, self._SCHEMAFILE),
+            )
+        self._write_colmap(
+            full, self._load_colmap(parent) if colmap is None else colmap
+        )
+        self._write_op(full, op, **details)
+
+    def _commit_version(
+        self,
+        name: str,
+        current: str,
+        op: str,
+        *,
+        scratch: str | None,
+        replaced: dict[str, set[str] | None],
+        touched: set[str] | None,
+        stats_key: str | None,
+        schema: DataFrame | str,
+        colmap: dict | None = None,
+        dv_add: dict | None = None,
+        stage: Callable[[str], None] | None = None,
+        neutral: bool = False,
+        **details,
+    ) -> None:
+        """Finish a partition-scoped commit derived from the snapshot
+        ``current``: move ``scratch``'s partitions into a new version
+        dir and link the rest of ``current`` (``_link_parent``; a
+        commit without scratch output links everything), write the
+        per-version files, run ``stage`` (the caller's changelog
+        staging) before the flip, then commit. ``touched`` is the set
+        of partitions whose content changed beyond the scratch ones
+        (emptied partitions); the commit records them with the
+        scratch partitions in ``_REWRITTEN`` and goes through
+        ``_commit_pointer_or_rebase``. ``None`` means the touched set
+        cannot be proven: no sidecar, plain table-level
+        compare-and-set. ``neutral`` marks a layout-only commit
+        (OPTIMIZE)."""
+        version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
+        full = os.path.join(self.root, version_dir)
+        os.makedirs(full)
+        moved: set[str] = set()
+        if scratch is not None:
+            moved = self._move_partitions(scratch, full)
+            shutil.rmtree(scratch, ignore_errors=True)
+        self._link_parent(
+            current,
+            full,
+            {**dict.fromkeys(moved), **replaced},
+            root_files=scratch is None,
+        )
+        self._write_version_files(
+            full,
+            current,
+            op,
+            stats_key=stats_key,
+            schema=schema,
+            colmap=colmap,
+            dv_add=dv_add,
+            **details,
+        )
+        if stage is not None:
+            stage(full)
+        based_on = os.path.basename(current)
+        if touched is None:
+            self._commit_pointer(name, version_dir, based_on=based_on)
+            final = version_dir
+        else:
+            touched = touched | moved
+            self._write_rewritten(full, touched, based_on, neutral=neutral)
+            final = self._commit_pointer_or_rebase(
+                name, version_dir, based_on, touched
+            )
+        if stage is not None:
+            self._publish_staged(name)
+        self._prune(name, keep=final)
 
     def current_path(self, name: str) -> str | None:
         p = self._pointer(name)
@@ -1202,10 +1346,7 @@ class TableStore:
                 )
             cons = self.constraints(name)
             cons[cname] = expr
-            tmp = self._constraints_path(name) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(cons, f)
-            os.replace(tmp, self._constraints_path(name))
+            self._write_json_sidecar(self._constraints_path(name), cons)
 
     def drop_check_constraint(self, name: str, cname: str) -> None:
         """Remove a declared constraint (``DROP CONSTRAINT`` analog);
@@ -1219,10 +1360,7 @@ class TableStore:
                     f"(declared: {sorted(cons)})"
                 )
             del cons[cname]
-            tmp = self._constraints_path(name) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(cons, f)
-            os.replace(tmp, self._constraints_path(name))
+            self._write_json_sidecar(self._constraints_path(name), cons)
 
     def _enforce_constraints(self, name: str, df: DataFrame) -> None:
         """Validate data about to become part of a new version with
@@ -1345,8 +1483,8 @@ class TableStore:
 
     def _write_json_sidecar(self, path: str, obj) -> None:
         """Atomic JSON sidecar write (tmp + os.replace) — the one
-        persistence primitive behind the constraint, generated-column
-        and colmap sidecars."""
+        persistence primitive behind the table-level sidecars and the
+        per-version metadata files."""
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(obj, f)
@@ -1694,10 +1832,7 @@ class TableStore:
             except OSError:
                 pass
             return
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(dv, f)
-        os.replace(tmp, p)
+        self._write_json_sidecar(p, dv)
 
     def _dv_rel_expr(self, version_full: str) -> Column:
         """Version-relative file path of each row's source file,
@@ -1738,34 +1873,37 @@ class TableStore:
         )
         return out
 
-    def _carry_dv(self, src_full: str, dst_full: str) -> None:
-        """Carry deletion-vector entries across a version rewrite —
-        CORRECTNESS-critical, unlike the advisory bloom/minmax carry:
-        a hard-linked file whose DV entry is dropped would resurrect
-        its deleted rows. Entries carry exactly for files hard-linked
-        into the new version (same rel path AND same inode); rewritten
-        files materialized the filter through a DV-wrapped read, so
-        their entries correctly die with them. Unions with a DV
-        already present at the destination (the rebase carries from
-        both parents)."""
-        src_dv = self._load_dv(src_full)
-        if not src_dv:
-            return
-        kept: dict = {}
-        for rel, rows in src_dv.items():
+    @staticmethod
+    def _linked_entries(src_full: str, dst_full: str, entries: dict) -> dict:
+        """The entries of a per-file sidecar (rel path -> value) whose
+        file is hard-linked from ``src_full`` into ``dst_full`` — same
+        relative path AND same inode. Rewritten files fall out."""
+        kept = {}
+        for rel, val in entries.items():
             try:
                 if os.path.samefile(
                     os.path.join(src_full, rel), os.path.join(dst_full, rel)
                 ):
-                    kept[rel] = rows
+                    kept[rel] = val
             except OSError:
-                continue
-        if not kept:
-            return
-        merged = self._load_dv(dst_full)
-        for rel, rows in kept.items():
-            merged[rel] = sorted(set(merged.get(rel, [])) | set(rows))
-        self._write_dv(dst_full, merged)
+                continue  # file not carried into the new version
+        return kept
+
+    def _carry_dv(
+        self, src_full: str, dst_full: str, add: dict | None = None
+    ) -> None:
+        """Carry deletion-vector entries across a version rewrite —
+        CORRECTNESS-critical, unlike the advisory bloom/minmax carry:
+        a hard-linked file whose DV entry is dropped would resurrect
+        its deleted rows. Entries carry exactly for files hard-linked
+        into the new version; rewritten files materialized the filter
+        through a DV-wrapped read, so their entries correctly die with
+        them. ``add`` unions further entries in (new deletes, or the
+        partitions a rebase moved in)."""
+        dv = self._linked_entries(src_full, dst_full, self._load_dv(src_full))
+        for rel, rows in (add or {}).items():
+            dv[rel] = [*dv.get(rel, ()), *rows]
+        self._write_dv(dst_full, dv)
 
     def delete_vectored(
         self,
@@ -1830,7 +1968,7 @@ class TableStore:
             matches = pin(matches)
         try:
             return self._delete_vectored_inner(
-                name, current, dv, matches, keys, max_rows, log_changes
+                name, current, matches, keys, max_rows, log_changes
             )
         finally:
             if log_changes:
@@ -1842,7 +1980,6 @@ class TableStore:
         self,
         name: str,
         current: str,
-        dv: dict,
         matches: DataFrame,
         keys: Sequence[str] | None,
         max_rows: int,
@@ -1859,59 +1996,51 @@ class TableStore:
             )
         if not pairs:
             return 0
-        new_dv = {rel: list(rows) for rel, rows in dv.items()}
+        new_dv: dict = {}
         for r in pairs:
             new_dv.setdefault(r["__dv_rel"], []).append(int(r["__dv_ri"]))
-        version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
-        full = os.path.join(self.root, version_dir)
-        os.makedirs(full)
-        for base, dirs, files in os.walk(current):
-            # never carry another commit's staged change records
-            dirs[:] = [d for d in dirs if d != self._STAGED_DIR]
-            rel = os.path.relpath(base, current)
-            dst = full if rel == "." else os.path.join(full, rel)
-            os.makedirs(dst, exist_ok=True)
-            for fname in files:
-                if fname in (
-                    self._OPFILE,
-                    self._DVFILE,
-                    self._REWRITTENFILE,
-                    self._STAGED_MANIFEST,
-                ):
-                    continue  # fresh commit metadata below
-                os.link(os.path.join(base, fname), os.path.join(dst, fname))
-        self._write_dv(full, new_dv)
-        self._write_op(full, "delete_vectored", n_rows=len(pairs))
-        if log_changes:
+        affected = {
+            r["__dv_rel"].split("/", 1)[0]
+            for r in pairs
+            if "/" in r["__dv_rel"]
+        }
+        stats = self._load_file_stats(current)
+        # a metadata-only commit: every file of the current version
+        # links into the new one. On a partitioned table the logical
+        # content of exactly the affected partitions changed, so the
+        # commit takes part in partition-level conflict detection
+        self._commit_version(
+            name,
+            current,
+            "delete_vectored",
+            scratch=None,
+            replaced={},
+            touched=(
+                affected
+                if affected and self.partition_spec(name) is not None
+                else None
+            ),
+            stats_key=(stats or {}).get("key"),
+            schema=current,
+            dv_add=new_dv,
             # drop the internal bucket column like every other
             # changelog writer (the stored schema carries it on
             # hash-partitioned tables; leaking it would give the
-            # feed's files inconsistent schemas). Staged pre-flip:
-            # the commit publishes state + changes atomically
-            self._append_delete_records(
-                name,
-                matches.drop("__dv_rel", "__dv_ri", "__bucket"),
-                list(keys),
-                stage_to=full,
-            )
-        affected = sorted(
-            {r["__dv_rel"].split("/", 1)[0] for r in pairs
-             if "/" in r["__dv_rel"]}
+            # feed's files inconsistent schemas)
+            stage=(
+                (
+                    lambda full: self._append_delete_records(
+                        name,
+                        matches.drop("__dv_rel", "__dv_ri", "__bucket"),
+                        list(keys),
+                        stage_to=full,
+                    )
+                )
+                if log_changes
+                else None
+            ),
+            n_rows=len(pairs),
         )
-        cur_base = os.path.basename(current)
-        if affected and self.partition_spec(name) is not None:
-            # logical content of exactly these partitions changed:
-            # participate in partition-level conflict detection
-            self._write_rewritten(full, set(affected), cur_base)
-            final = self._commit_pointer_or_rebase(
-                name, version_dir, cur_base, set(affected)
-            )
-        else:
-            self._commit_pointer(name, version_dir, based_on=cur_base)
-            final = version_dir
-        if log_changes:
-            self._publish_staged(name)
-        self._prune(name, keep=final)
         return len(pairs)
 
     # --- change-data-feed (CDF-lite) --------------------------------------
@@ -2040,10 +2169,9 @@ class TableStore:
             "version": int(ver),
             "columns": list(columns),
         }
-        tmp = os.path.join(version_full, self._STAGED_MANIFEST + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(man, f)
-        os.replace(tmp, os.path.join(version_full, self._STAGED_MANIFEST))
+        self._write_json_sidecar(
+            os.path.join(version_full, self._STAGED_MANIFEST), man
+        )
 
     def _publish_staged(self, name: str) -> int:
         """Move staged change records of every COMMITTED version dir
@@ -2312,10 +2440,7 @@ class TableStore:
         with self._table_flock(name, "_EXCLLOCK"):
             vs = set(self.feed_exclusions(name))
             vs.add(int(ver))
-            tmp = self._exclusions_path(name) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(sorted(vs), f)
-            os.replace(tmp, self._exclusions_path(name))
+            self._write_json_sidecar(self._exclusions_path(name), sorted(vs))
 
     def _append_changelog(
         self,
@@ -2870,10 +2995,7 @@ class TableStore:
             "bytes": int(n_bytes),
             **details,
         }
-        tmp = os.path.join(version_full, self._OPFILE + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(rec, f)
-        os.replace(tmp, os.path.join(version_full, self._OPFILE))
+        self._write_json_sidecar(os.path.join(version_full, self._OPFILE), rec)
 
     def history(self, name: str) -> DataFrame:
         """``DESCRIBE HISTORY`` analog: one row per retained version,
@@ -2971,22 +3093,9 @@ class TableStore:
             return json.load(f)
 
     def _write_colmap(self, version_full: str, cm: dict | None) -> None:
-        if cm is None:
-            return
-        tmp = os.path.join(version_full, self._COLMAPFILE + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump(cm, f)
-        os.replace(tmp, os.path.join(version_full, self._COLMAPFILE))
-
-    def _carry_colmap(self, src_full: str, dst_full: str) -> None:
-        """Copy the column mapping into a new version dir assembled
-        from ``src_full``'s files (pruned merges, mutations,
-        optimize). Paths that hard-link the WHOLE source dir (clone,
-        restore, delete_vectored) carry it via their walk already."""
-        p = os.path.join(src_full, self._COLMAPFILE)
-        if os.path.exists(p):
-            shutil.copyfile(
-                p, os.path.join(dst_full, self._COLMAPFILE)
+        if cm is not None:
+            self._write_json_sidecar(
+                os.path.join(version_full, self._COLMAPFILE), cm
             )
 
     def _apply_colmap(self, df: DataFrame, version_full: str) -> DataFrame:
@@ -3636,10 +3745,10 @@ class TableStore:
         promote, never be clobbered by this stage)."""
         self._settle_pending_break(name)
         with self._table_flock(name, "_BREAKLOCK"):
-            tmp = self._pending_break_path(name) + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump({"version": int(version), "dir": version_dir}, f)
-            os.replace(tmp, self._pending_break_path(name))
+            self._write_json_sidecar(
+                self._pending_break_path(name),
+                {"version": int(version), "dir": version_dir},
+            )
 
     def _set_schema_break(self, name: str, version: int) -> None:
         # flocked: runs outside the commit lock, so without the guard
@@ -3687,15 +3796,21 @@ class TableStore:
             return None
 
     def _write_file_stats(
-        self, version_full: str, key: str, carry: dict | None = None
+        self, version_full: str, key: str, *carry_from: str
     ) -> None:
         """Sidecar ``_FILESTATS.json`` inside the version dir: per-file
         [min, max] of the merge key. Hard-linked files keep their
         relative path across versions, so their stats are carried over
-        from the previous sidecar instead of re-read; only newly
-        written files pay a footer read (metadata-scale). The leading
-        underscore keeps Spark's parquet reader from touching it."""
-        carry = carry or {}
+        from the sidecars of the ``carry_from`` versions (when keyed
+        on the same column; later ones win) instead of re-read; only
+        newly written files pay a footer read (metadata-scale). The
+        leading underscore keeps Spark's parquet reader from touching
+        it."""
+        carry: dict = {}
+        for src in carry_from:
+            stats = self._load_file_stats(src)
+            if stats is not None and stats.get("key") == key:
+                carry.update(stats.get("files") or {})
         files: dict[str, list | None] = {}
         for entry in os.listdir(version_full):
             pdir = os.path.join(version_full, entry)
@@ -3713,10 +3828,10 @@ class TableStore:
                     if rel in carry
                     else self._file_key_bounds(os.path.join(pdir, fname), key)
                 )
-        tmp = os.path.join(version_full, self._FILESTATS + ".tmp")
-        with open(tmp, "w") as f:
-            json.dump({"key": key, "files": files}, f)
-        os.replace(tmp, os.path.join(version_full, self._FILESTATS))
+        self._write_json_sidecar(
+            os.path.join(version_full, self._FILESTATS),
+            {"key": key, "files": files},
+        )
 
     _BLOOM_PREFIX = "_BLOOM."
     _MINMAX_PREFIX = "_MINMAX."
@@ -3724,7 +3839,7 @@ class TableStore:
     def _carry_bloom_sidecars(self, src_full: str, dst_full: str) -> None:
         """Carry per-column file-skipping sidecars — bloom bitsets AND
         secondary-column min/max bounds (operators/skipping.py) —
-        across a version rewrite, the way ``_write_file_stats(carry=)``
+        across a version rewrite, the way ``_write_file_stats``
         carries the merge key's bounds: entries for files hard-linked
         into the new version (same relative path AND same inode) are
         still valid and copy over; rewritten files stay unindexed in
@@ -3754,16 +3869,7 @@ class TableStore:
                 files = meta["files"]
             except Exception:
                 continue  # torn sidecar: probes full-scan, never wrong
-            kept = {}
-            for rel, bits in files.items():
-                try:
-                    if os.path.samefile(
-                        os.path.join(src_full, rel),
-                        os.path.join(dst_full, rel),
-                    ):
-                        kept[rel] = bits
-                except OSError:
-                    continue  # file not carried into the new version
+            kept = self._linked_entries(src_full, dst_full, files)
             if not kept:
                 continue
             dst_p = os.path.join(dst_full, fname)
@@ -3785,10 +3891,7 @@ class TableStore:
                 except Exception:
                     pass
             meta["files"] = kept
-            tmp = dst_p + ".tmp"
-            with open(tmp, "w") as f:
-                json.dump(meta, f)
-            os.replace(tmp, dst_p)
+            self._write_json_sidecar(dst_p, meta)
 
     def _load_file_stats(self, version_full: str) -> dict | None:
         p = os.path.join(version_full, self._FILESTATS)
@@ -3861,10 +3964,7 @@ class TableStore:
                 "n_buckets": int(n_buckets),
                 "keys": list(keys or []),
             }
-        tmp_spec = self._spec_path(name) + ".tmp"
-        with open(tmp_spec, "w") as f:
-            json.dump(spec, f)
-        os.replace(tmp_spec, self._spec_path(name))
+        self._write_json_sidecar(self._spec_path(name), spec)
 
     def write_partitioned(
         self,
@@ -3892,30 +3992,29 @@ class TableStore:
         except BaseException:
             self._release_pins(_idpins)
             raise
-        if partition_column is not None:
-            spec = {
-                "mode": "column",
-                "column": partition_column,
-                "keys": list(keys),
-            }
-            part_col = partition_column
-            out = df
-        else:
-            spec = {"mode": "hash", "n_buckets": int(n_buckets), "keys": list(keys)}
-            part_col = "__bucket"
-            out = df.withColumn(part_col, self._partition_expr(spec, keys))
-        tmp_spec = self._spec_path(name) + ".tmp"
-        with open(tmp_spec, "w") as f:
-            json.dump(spec, f)
-        os.replace(tmp_spec, self._spec_path(name))
-        # range-cluster on (partition, merge key): files within a
-        # partition get disjoint key ranges, so the min/max sidecar can
-        # actually skip files on later merges
-        out = out.repartitionByRange(F.col(part_col), F.col(keys[0]))
+        self.declare_partitioning(name, keys, n_buckets, partition_column)
         try:
-            self.write(name, out, partition_by=[part_col], _op="create")
+            self._create_partitioned(
+                name, df, self.partition_spec(name), keys, "create"
+            )
         finally:
             self._release_pins(_idpins)
+
+    def _create_partitioned(
+        self, name: str, df: DataFrame, spec: dict, keys: Sequence[str],
+        op: str,
+    ) -> None:
+        """Create the table laid out by ``spec``, range-clustered on
+        (partition, merge key): files within a partition get disjoint
+        key ranges, so the min/max sidecar can actually skip files on
+        later merges."""
+        if spec["mode"] == "hash":
+            part_col = "__bucket"
+            df = df.withColumn(part_col, self._partition_expr(spec, keys))
+        else:
+            part_col = spec["column"]
+        df = df.repartitionByRange(F.col(part_col), F.col(keys[0]))
+        self.write(name, df, partition_by=[part_col], _op=op)
         self._write_file_stats(self.current_path(name), keys[0])
 
     def _merge_partitioned(
@@ -3963,15 +4062,6 @@ class TableStore:
                 if want is not None and tombs.schema[pc].dataType != want:
                     tombs = tombs.withColumn(pc, F.col(pc).cast(want))
         if policy == "upsert_delete":
-            if tombs is None:
-                raise ValueError(
-                    "policy='upsert_delete' requires tombs=<DataFrame of "
-                    "key column(s) to delete>"
-                )
-            if kwargs.get("evolve_schema"):
-                raise ValueError(
-                    "evolve_schema is not supported with upsert_delete"
-                )
             # fold the tomb keys into the source as NULL-payload marker
             # rows so ONE pass yields the affected partitions and key
             # bounds of BOTH sides (files holding doomed keys must
@@ -4164,60 +4254,21 @@ class TableStore:
             self.spark.sparkContext.defaultParallelism,
         ):
             cluster_into = (part_col, self._partition_expr(spec, keys))
-        if policy == "insert_only":
-            merged = merge_insert_only(target_affected, src_plain, keys)
-        elif policy == "scd1":
-            merged = merge_scd1(
-                target_affected,
-                src_plain,
-                keys,
-                kwargs.get("order_col"),
-                cluster_into=cluster_into,
+        tomb_keys = None
+        if policy == "upsert_delete":
+            tomb_keys = (
+                src_plain.filter(F.col("__tomb")).select(*keys).distinct()
             )
-        elif policy == "conditional_update":
-            merged = merge_conditional_update(target_affected, src_plain, keys, **kwargs)
-        elif policy == "full_upsert":
-            merged = merge_full_upsert(
-                target_affected,
-                src_plain,
-                keys,
-                kwargs.get("update_cols"),
-                cluster_into=cluster_into,
-            )
-        elif policy == "upsert_delete":
-            from .joins import maybe_broadcast
-
-            t_keys = src_plain.filter(F.col("__tomb")).select(*keys).distinct()
-            ups = src_plain.filter(~F.col("__tomb")).drop("__tomb")
-            survivors = target_affected.join(
-                maybe_broadcast(t_keys), list(keys), "left_anti"
-            )
-            merged = merge_full_upsert(
-                survivors,
-                ups,
-                keys,
-                kwargs.get("update_cols"),
-                cluster_into=cluster_into,
-            )
-        elif policy == "cdc_versioned":
-            merged = apply_cdc_versioned(
-                target_affected,
-                src_plain,
-                keys,
-                kwargs["seq_col"],
-                kwargs.get("op_col", "op"),
-                kwargs.get("delete_op", "D"),
-            )
-        elif policy == "scd2":
-            merged = scd2_merge_batch(
-                target_affected,
-                src_plain,
-                keys,
-                kwargs["seq_col"],
-                kwargs.get("tiebreak_col"),
-            )
-        else:
-            raise ValueError(f"unknown policy {policy!r}")
+            src_plain = src_plain.filter(~F.col("__tomb")).drop("__tomb")
+        merged = self._merge_plan(
+            target_affected,
+            src_plain,
+            keys,
+            policy,
+            tomb_keys=tomb_keys,
+            cluster_into=cluster_into,
+            **kwargs,
+        )
         # CHECK constraints validate the affected partitions' NEW
         # content before any scratch write or commit (the partitioned
         # path bypasses write(), so it hooks here; no-op without
@@ -4262,109 +4313,15 @@ class TableStore:
             # clustering exchange here
             merged = merged.repartition(F.col(part_col))
         merged.write.mode("overwrite").partitionBy(part_col).parquet(scratch)
-        merged_schema_src = merged
-        # ...then assemble the new version: hard-link every untouched
-        # partition dir from the current version (byte-identical, no
-        # data movement), move the rewritten ones in — and, under
-        # file-level pruning, hard-link the non-hit files of rewritten
-        # partitions next to the fresh ones — then flip the pointer.
-        version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
-        full = os.path.join(self.root, version_dir)
-        os.makedirs(full)
-        # the rewritten-partition set comes from the scratch listing so
-        # dir names always use Spark's own partition-value encoding
-        rewritten = {
-            e
-            for e in os.listdir(scratch)
-            if os.path.isdir(os.path.join(scratch, e))
-        }
-        for entry in rewritten:
-            os.rename(os.path.join(scratch, entry), os.path.join(full, entry))
-        shutil.rmtree(scratch, ignore_errors=True)
-        for entry in os.listdir(current):
-            src_path = os.path.join(current, entry)
-            if not os.path.isdir(src_path) or entry == self._STAGED_DIR:
-                continue
-            if entry in rewritten:
-                if not use_stats:
-                    continue  # whole partition was rewritten
-                hit = hit_by_dir.get(entry, set())
-                for fname in os.listdir(src_path):
-                    if fname in hit:
-                        continue  # rewritten content; fresh file has it
-                    if (
-                        fname.startswith(".")
-                        and fname.endswith(".crc")
-                        and fname[1:-4] in hit
-                    ):
-                        continue  # checksum of a rewritten file
-                    os.link(
-                        os.path.join(src_path, fname),
-                        os.path.join(full, entry, fname),
-                    )
-            elif policy == "upsert_delete" and entry in affected_dirs:
-                # affected partition whose post-merge state produced NO
-                # scratch output: the fused delete emptied its rewritten
-                # content (all of it when unpruned; its HIT files under
-                # file pruning). Linking it wholesale would resurrect
-                # the deleted keys — link only the non-hit survivors.
-                if not use_stats:
-                    continue  # fully rewritten to empty
-                hit = hit_by_dir.get(entry, set())
-                keep = [
-                    fname
-                    for fname in os.listdir(src_path)
-                    if fname not in hit
-                    and not (
-                        fname.startswith(".")
-                        and fname.endswith(".crc")
-                        and fname[1:-4] in hit
-                    )
-                ]
-                if keep:
-                    os.makedirs(os.path.join(full, entry))
-                    for fname in keep:
-                        os.link(
-                            os.path.join(src_path, fname),
-                            os.path.join(full, entry, fname),
-                        )
-            else:
-                os.makedirs(os.path.join(full, entry))
-                for fname in os.listdir(src_path):
-                    os.link(
-                        os.path.join(src_path, fname),
-                        os.path.join(full, entry, fname),
-                    )
-        # refresh the data-skipping sidecar: linked files carry their
-        # bounds over (same relative path), new files pay a footer read
-        carry = (
-            stats.get("files")
-            if stats is not None and stats.get("key") == key0
-            else None
-        )
-        self._write_file_stats(full, key0, carry=carry)
-        self._carry_bloom_sidecars(current, full)
-        self._carry_dv(current, full)
-        self._write_schema(full, merged_schema_src)
-        self._write_colmap(full, cm_out)
-        self._write_op(full, f"merge:{policy}")
-        touched = set(rewritten)
-        if policy == "upsert_delete":
-            # partitions the fused delete EMPTIED have no scratch dir
-            # but their content changed — conflict detection must see
-            # them as rewritten
-            touched |= set(affected_dirs)
-        self._write_rewritten(full, touched, os.path.basename(current))
-        if self._changelog_enabled(name):
+
+        def stage(full: str) -> None:
             # diff only the affected partitions — untouched ones are
-            # hard-linked and by construction unchanged. Staged into
-            # the version dir BEFORE the flip (crash-atomic CDF): the
-            # post-image reads the NEW dir directly — identical to
-            # the committed result for the affected partitions even
-            # under a rebase, which takes exactly these partitions
-            # from this dir (intervening commits were proven disjoint,
-            # so the snapshot is still their pre-image); a rebase also
-            # carries the staged records into the dir it commits
+            # hard-linked and by construction unchanged. The post-image
+            # reads the NEW dir directly — identical to the committed
+            # result for the affected partitions even under a rebase,
+            # which takes exactly these partitions from this dir
+            # (intervening commits were proven disjoint, so the
+            # snapshot is still their pre-image)
             pre = self._read_version(current).filter(
                 F.col(part_col).isin(affected)
             )
@@ -4381,15 +4338,86 @@ class TableStore:
                 include_deletes=(policy == "upsert_delete"),
                 stage_to=full,
             )
-        final = self._commit_pointer_or_rebase(
+
+        # under file-level pruning an affected partition keeps its
+        # non-hit files; one the fused delete EMPTIED has no scratch
+        # dir but changed content, so it is never linked whole and
+        # counts as touched
+        self._commit_version(
             name,
-            version_dir,
-            based_on=os.path.basename(current),
-            rewritten=touched,
+            current,
+            f"merge:{policy}",
+            scratch=scratch,
+            replaced={
+                d: (hit_by_dir.get(d, set()) if use_stats else None)
+                for d in affected_dirs
+            },
+            touched=set(affected_dirs),
+            stats_key=key0,
+            schema=merged,
+            colmap=cm_out,
+            stage=stage if self._changelog_enabled(name) else None,
         )
-        if self._changelog_enabled(name):
-            self._publish_staged(name)
-        self._prune(name, keep=final)
+
+    @staticmethod
+    def _merge_plan(
+        target: DataFrame,
+        source: DataFrame,
+        keys: Sequence[str],
+        policy: str,
+        tomb_keys: DataFrame | None = None,
+        cluster_into: tuple[str, Column] | None = None,
+        **kwargs,
+    ) -> DataFrame:
+        """The post-merge state under ``policy`` — the one policy
+        dispatch of both merge paths (see ``merge`` for the policies).
+        ``tomb_keys`` are upsert_delete's distinct keys to delete;
+        ``cluster_into`` is the partitioned path's window/clustering
+        fusion for the window-shaped policies."""
+        if policy == "insert_only":
+            return merge_insert_only(target, source, keys)
+        if policy == "scd1":
+            return merge_scd1(
+                target,
+                source,
+                keys,
+                kwargs.get("order_col"),
+                cluster_into=cluster_into,
+            )
+        if policy == "conditional_update":
+            return merge_conditional_update(target, source, keys, **kwargs)
+        if policy in ("full_upsert", "upsert_delete"):
+            if policy == "upsert_delete":
+                from .joins import maybe_broadcast
+
+                target = target.join(
+                    maybe_broadcast(tomb_keys), list(keys), "left_anti"
+                )
+            return merge_full_upsert(
+                target,
+                source,
+                keys,
+                kwargs.get("update_cols"),
+                cluster_into=cluster_into,
+            )
+        if policy == "cdc_versioned":
+            return apply_cdc_versioned(
+                target,
+                source,
+                keys,
+                kwargs["seq_col"],
+                kwargs.get("op_col", "op"),
+                kwargs.get("delete_op", "D"),
+            )
+        if policy == "scd2":
+            return scd2_merge_batch(
+                target,
+                source,
+                keys,
+                kwargs["seq_col"],
+                kwargs.get("tiebreak_col"),
+            )
+        raise ValueError(f"unknown policy {policy!r}")
 
     def merge(
         self,
@@ -4498,21 +4526,9 @@ class TableStore:
             if spec is not None:
                 # declared-ahead spec (declare_partitioning): create
                 # the table partitioned so merge #2 onward is pruned
-                if spec["mode"] == "hash":
-                    part_col = "__bucket"
-                    base = base.withColumn(
-                        part_col, self._partition_expr(spec, keys)
-                    )
-                else:
-                    part_col = spec["column"]
-                base = base.repartitionByRange(
-                    F.col(part_col), F.col(keys[0])
+                self._create_partitioned(
+                    name, base, spec, keys, f"create:{policy}"
                 )
-                self.write(
-                    name, base, partition_by=[part_col],
-                    _op=f"create:{policy}",
-                )
-                self._write_file_stats(self.current_path(name), keys[0])
             else:
                 self.write(name, base, _op=f"create:{policy}")
             return
@@ -4523,43 +4539,19 @@ class TableStore:
         target = self._read_version(old_path).drop("__bucket")
         if evolve:
             target, source = align_for_evolution(target, source)
-        if policy == "insert_only":
-            merged = merge_insert_only(target, source, keys)
-        elif policy == "scd1":
-            merged = merge_scd1(target, source, keys, kwargs.get("order_col"))
-        elif policy == "conditional_update":
-            merged = merge_conditional_update(target, source, keys, **kwargs)
-        elif policy == "full_upsert":
-            merged = merge_full_upsert(target, source, keys, kwargs.get("update_cols"))
-        elif policy == "upsert_delete":
-            from .joins import maybe_broadcast
-
-            t_keys = kwargs["tombs"].select(*keys).distinct()
-            merged = merge_full_upsert(
-                target.join(maybe_broadcast(t_keys), list(keys), "left_anti"),
-                source,
-                keys,
-                kwargs.get("update_cols"),
-            )
-        elif policy == "cdc_versioned":
-            merged = apply_cdc_versioned(
-                target,
-                source,
-                keys,
-                kwargs["seq_col"],
-                kwargs.get("op_col", "op"),
-                kwargs.get("delete_op", "D"),
-            )
-        elif policy == "scd2":
-            merged = scd2_merge_batch(
-                target,
-                source,
-                keys,
-                kwargs["seq_col"],
-                kwargs.get("tiebreak_col"),
-            )
-        else:
-            raise ValueError(f"unknown policy {policy!r}")
+        tombs = kwargs.pop("tombs", None)
+        merged = self._merge_plan(
+            target,
+            source,
+            keys,
+            policy,
+            tomb_keys=(
+                tombs.select(*keys).distinct()
+                if policy == "upsert_delete"
+                else None
+            ),
+            **kwargs,
+        )
         # materialize before the pointer flip; the new version dir is
         # written from the merged plan which still reads the old
         # version. Change rows stage inside write()'s pre-flip window
@@ -4584,7 +4576,6 @@ class TableStore:
             _based_on=os.path.basename(old_path) if old_path else None,
             _stage=stage,
         )
-
 
     def versions(self, name: str) -> list[str]:
         """Version directory names surviving retention, oldest →
@@ -4761,10 +4752,7 @@ class TableStore:
                     raise
         spec = self.partition_spec(src)
         if spec is not None:
-            tmp_spec = self._spec_path(dst) + ".tmp"
-            with open(tmp_spec, "w") as f:
-                json.dump(spec, f)
-            os.replace(tmp_spec, self._spec_path(dst))
+            self._write_json_sidecar(self._spec_path(dst), spec)
         if self._changelog_enabled(src) and not self.changelog:
             self.enable_changelog(dst)
         # a fork keeps its invariants: CHECK constraints and generated
@@ -5324,74 +5312,30 @@ class TableStore:
         # per rewritten partition, not scan-tasks x dirs
         out = out.repartition(F.col(part_col))
         out.write.mode("overwrite").partitionBy(part_col).parquet(scratch)
-        version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
-        full = os.path.join(self.root, version_dir)
-        os.makedirs(full)
-        rewritten = {
-            e
-            for e in os.listdir(scratch)
-            if os.path.isdir(os.path.join(scratch, e))
-        }
-        for entry in rewritten:
-            os.rename(os.path.join(scratch, entry), os.path.join(full, entry))
-        shutil.rmtree(scratch, ignore_errors=True)
-        if simple:
-            for entry in os.listdir(current):
-                src_path = os.path.join(current, entry)
-                if (
-                    not os.path.isdir(src_path)
-                    or entry in rewritten
-                    or entry in affected_dirs  # fully-emptied partition
-                    or entry == self._STAGED_DIR
-                ):
-                    continue
-                os.makedirs(os.path.join(full, entry))
-                for fname in os.listdir(src_path):
-                    os.link(
-                        os.path.join(src_path, fname),
-                        os.path.join(full, entry, fname),
-                    )
+        plain = matches.drop(part_col) if spec["mode"] == "hash" else matches
         stats = self._load_file_stats(current)
-        key0 = (stats or {}).get("key") or (spec.get("keys") or [None])[0]
-        if key0 is not None:
-            carry = (
-                stats.get("files")
-                if simple and stats is not None and stats.get("key") == key0
+        # a fully-emptied partition leaves no scratch dir but changed
+        # content; non-simple values rewrote the whole table (nothing
+        # links) and an unprovable partition set — no _REWRITTEN, so
+        # conflict detection stays conservative
+        self._commit_version(
+            name,
+            current,
+            op,
+            scratch=scratch,
+            replaced=dict.fromkeys(
+                affected_dirs if simple else os.listdir(current)
+            ),
+            touched=set(affected_dirs) if simple else None,
+            stats_key=(stats or {}).get("key")
+            or (spec.get("keys") or [None])[0],
+            schema=self._to_physical(df_all, cm_cur)[0],
+            stage=(
+                (lambda full: log(plain, list(keys), full))
+                if log_changes
                 else None
-            )
-            self._write_file_stats(full, key0, carry=carry)
-        self._carry_bloom_sidecars(current, full)
-        self._carry_dv(current, full)
-        self._write_schema(full, self._to_physical(df_all, cm_cur)[0])
-        self._carry_colmap(current, full)
-        self._write_op(full, op)
-        if log_changes:
-            # staged pre-flip (crash-atomic CDF); matches reads the
-            # pre-mutation version dir. A rebase carries the staged
-            # records into the dir it actually commits
-            plain = matches.drop(part_col) if spec["mode"] == "hash" else matches
-            log(plain, list(keys), full)
-        if simple:
-            # touched = rewritten dirs PLUS fully-emptied ones (a
-            # delete that drains a partition leaves no scratch dir);
-            # non-simple values rewrote an unprovable set — leave the
-            # sidecar off so conflict detection stays conservative
-            touched = rewritten | set(affected_dirs)
-            self._write_rewritten(full, touched, os.path.basename(current))
-            final = self._commit_pointer_or_rebase(
-                name,
-                version_dir,
-                based_on=os.path.basename(current),
-                rewritten=touched,
-            )
-        else:
-            self._commit_pointer(
-                name, version_dir, based_on=os.path.basename(current)
-            )
-            final = version_dir
-        if log_changes:
-            self._publish_staged(name)
-        self._prune(name, keep=final)
+            ),
+        )
         return int(n_hit)
 
     def maybe_optimize(
@@ -5648,42 +5592,6 @@ class TableStore:
                 f"optimize validation failed: {n_scratch} rows written "
                 f"vs {n_before} read — table untouched"
             )
-        version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
-        full = os.path.join(self.root, version_dir)
-        os.makedirs(full)
-        rewritten = {
-            e
-            for e in os.listdir(scratch)
-            if os.path.isdir(os.path.join(scratch, e))
-        }
-        for entry in rewritten:
-            os.rename(os.path.join(scratch, entry), os.path.join(full, entry))
-        shutil.rmtree(scratch, ignore_errors=True)
-        for entry in os.listdir(current):
-            src_path = os.path.join(current, entry)
-            if (
-                not os.path.isdir(src_path)
-                or entry in rewritten
-                or entry == self._STAGED_DIR
-            ):
-                continue
-            os.makedirs(os.path.join(full, entry))
-            for fname in os.listdir(src_path):
-                os.link(
-                    os.path.join(src_path, fname),
-                    os.path.join(full, entry, fname),
-                )
-        carry = (
-            stats.get("files")
-            if stats is not None and stats.get("key") == key
-            else None
-        )
-        self._write_file_stats(full, key, carry=carry)
-        self._carry_bloom_sidecars(current, full)
-        self._carry_dv(current, full)
-        self._write_schema(full, self._to_physical(df_all, cm_cur)[0])
-        self._carry_colmap(current, full)
-        self._write_op(full, "optimize")
         # compaction participates in partition-level OCC as a NEUTRAL
         # commit: it records which partitions it rewrote (so later
         # writers' chain walks stay provable THROUGH a compaction —
@@ -5695,12 +5603,17 @@ class TableStore:
         # of discarding the whole compaction job on a CAS miss — at
         # 1000 trickle writers, compaction racing merges is the steady
         # state, exactly Delta's compaction-vs-writer semantics
-        cur_base = os.path.basename(current)
-        self._write_rewritten(full, rewritten, cur_base, neutral=True)
-        final = self._commit_pointer_or_rebase(
-            name, version_dir, based_on=cur_base, rewritten=rewritten
+        self._commit_version(
+            name,
+            current,
+            "optimize",
+            scratch=scratch,
+            replaced={},
+            touched=set(),
+            stats_key=key,
+            schema=self._to_physical(df_all, cm_cur)[0],
+            neutral=True,
         )
-        self._prune(name, keep=final)
 
 
 def delta_merge_available() -> bool:

@@ -1,8 +1,7 @@
 """Text-analysis operators for training-data pipelines.
 
 All pure Column expressions (JVM-side, codegen'd — no Python in the
-hot path): tokenization, token/char statistics, quality scoring,
-stopword ratio, n-gram language ID, and md5 document fingerprinting.
+hot path): tokenization, token/char statistics, stopword ratio, n-gram language ID, and md5 document fingerprinting.
 Formulas are deliberately ANSI-portable so each operator is
 oracle-checkable against DuckDB.
 
@@ -67,22 +66,6 @@ def stopword_ratio(
     toks = tokens(text)
     stops = F.filter(toks, lambda t: t.isin(*stopwords))
     return F.size(stops) / F.size(toks)
-
-
-def quality_score(text: Column | str) -> Column:
-    """Composite [0,1] quality heuristic: length band + stopword band.
-
-    score = 0.5·(20 ≤ n_tokens ≤ 1000) + 0.3·(0.05 ≤ stop_ratio ≤ 0.6)
-          + 0.2·(avg_token_len between 2 and 12)
-    """
-    n = token_count(text)
-    sr = stopword_ratio(text)
-    al = avg_token_length(text)
-    return (
-        F.when((n >= 20) & (n <= 1000), F.lit(0.5)).otherwise(F.lit(0.0))
-        + F.when((sr >= 0.05) & (sr <= 0.6), F.lit(0.3)).otherwise(F.lit(0.0))
-        + F.when((al >= 2) & (al <= 12), F.lit(0.2)).otherwise(F.lit(0.0))
-    )
 
 
 def lang_scores(text: Column | str) -> dict[str, Column]:

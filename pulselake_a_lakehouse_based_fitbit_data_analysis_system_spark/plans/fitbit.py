@@ -70,7 +70,6 @@ class FitbitPipeline:
         workdir: str,
         available_now: bool = True,
         processing_time: str = "1 seconds",
-        keep_versions: int | None = None,
         incremental_dims: bool = False,
     ) -> None:
         self.spark = spark
@@ -83,10 +82,10 @@ class FitbitPipeline:
         # files — retention must cover (read duration × merge rate).
         # Live processingTime mode merges every trigger, so it keeps
         # more versions for monitoring/reporting readers.
-        if keep_versions is None:
-            keep_versions = 2 if available_now else 8
         self.store = TableStore(
-            spark, os.path.join(workdir, "tables"), keep_versions=keep_versions
+            spark,
+            os.path.join(workdir, "tables"),
+            keep_versions=2 if available_now else 8,
         )
         # Incremental silver-on-silver / gold-on-silver maintenance
         # (reference S4 CDF reads): user_bins consumes user_profile's

@@ -48,7 +48,6 @@ def get_spark(
     cpus: int | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
-    use_rocksdb_state_store: bool = True,
 ) -> SparkSession:
     """Build (or fetch) the session.
 
@@ -85,20 +84,20 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # Streaming: bound the number of state-store instances locally.
         .config("spark.sql.streaming.stateStore.maintenanceInterval", "300s")
-    )
-    if use_rocksdb_state_store:
-        builder = builder.config(
+        .config(
             "spark.sql.streaming.stateStore.providerClass", _ROCKSDB_PROVIDER
-        ).config(
-            # Commit appends a changelog instead of uploading a full
-            # RocksDB snapshot every batch; snapshots move to background
-            # maintenance. Cuts per-batch commit wall (measured in
-            # SCALE.md "Streaming state-store tuning") and is the
-            # production-recommended pairing with the RocksDB provider.
+        )
+        # Commit appends a changelog instead of uploading a full
+        # RocksDB snapshot every batch; snapshots move to background
+        # maintenance. Cuts per-batch commit wall (measured in
+        # SCALE.md "Streaming state-store tuning") and is the
+        # production-recommended pairing with the RocksDB provider.
+        .config(
             "spark.sql.streaming.stateStore.rocksdb."
             "changelogCheckpointing.enabled",
             "true",
         )
+    )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

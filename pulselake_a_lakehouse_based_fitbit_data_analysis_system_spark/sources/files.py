@@ -63,24 +63,6 @@ def read_json_stream(
     return _with_ingest_metadata(reader.load(path))
 
 
-def read_parquet_stream(
-    spark: SparkSession, path: str, schema: T.StructType
-) -> DataFrame:
-    """Incremental parquet scan — used to stream driver testdata tables."""
-    return spark.readStream.format("parquet").schema(schema).load(path)
-
-
-def read_csv_batch(
-    spark: SparkSession, path: str, schema: T.StructType, header: bool = True
-) -> DataFrame:
-    df = spark.read.schema(schema).option("header", str(header).lower()).csv(path)
-    return _with_ingest_metadata(df)
-
-
-def read_json_batch(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
-    return _with_ingest_metadata(spark.read.schema(schema).json(path))
-
-
 def read_json_sql(spark: SparkSession, path: str, projection: str = "*") -> DataFrame:
     """SQL-over-files raw scan (reference S6,
     ``Setup/03-history-loader.py:16-18``: ``SELECT … FROM json.`path```)."""

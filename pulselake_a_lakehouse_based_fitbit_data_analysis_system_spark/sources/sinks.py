@@ -1,8 +1,6 @@
-"""Streaming sinks: append, foreachBatch-upsert, single-file archive.
+"""Streaming sinks: foreachBatch-upsert, single-file archive.
 
 Re-expresses the reference's write path:
-- S8 Delta append sink (``Bronze/04-bronze.py:31-42``) → parquet/delta
-  append with checkpoint.
 - S9 foreachBatch MERGE sink (``Silver/05-silver.py:6-13``) → a
   ``foreachBatch`` callback that applies a merge policy from
   ``operators.merge`` against a parquet-backed (or Delta, if present)
@@ -20,32 +18,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StreamingQuery
-
-
-def start_append_sink(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    fmt: str = "parquet",
-    available_now: bool = True,
-    processing_time: str = "5 seconds",
-    query_name: str | None = None,
-) -> StreamingQuery:
-    """Append sink with dual batch/stream trigger — the reference's
-    ``once`` flag pattern (``Bronze/04-bronze.py:39-42``)."""
-    writer = (
-        df.writeStream.format(fmt)
-        .outputMode("append")
-        .option("checkpointLocation", checkpoint)
-        .option("path", path)
-    )
-    if query_name:
-        writer = writer.queryName(query_name)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    else:
-        writer = writer.trigger(processingTime=processing_time)
-    return writer.start()
 
 
 def start_foreach_batch_sink(

@@ -23,7 +23,7 @@ import os
 import shutil
 import tempfile
 import uuid
-from collections.abc import Callable, Sequence
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -372,7 +372,9 @@ def _stores_per_partition(plan: str) -> int:
     commit overhead is 4x a dedup's at equal partition count —
     profiled on the J3 drain at sf0.1: 10 partitions = 40 stores,
     39.3 s summed state time, vs 4 partitions = 16 stores, 8.4 s,
-    with identical output (tools/ab_interval_join.py)."""
+    with identical output (SCALE.md, "Streaming state-store tuning";
+    the traced ``stream_state`` benchmark run reports the join's
+    ``streaming.state_commit_ms``)."""
     if "Join " in plan and plan.count("StreamingRelation") >= 2:
         return 4
     return 1
@@ -544,14 +546,6 @@ def finalize_running_totals(sink: DataFrame, key: str) -> DataFrame:
     )
 
 
-def run_stream_once(
-    build: Callable[[SparkSession], DataFrame],
-    spark: SparkSession,
-    output_mode: str = "append",
-) -> DataFrame:
-    return run_stream_to_memory(build(spark), output_mode=output_mode)
-
-
 def stateful_running_totals_tws(
     stream: DataFrame,
     key: str,
@@ -567,8 +561,8 @@ def stateful_running_totals_tws(
 
     State cost is identical to v1: one (count, sum) row per key,
     partitioned by ``key``, no shuffle beyond the groupBy. Requires
-    the RocksDB state-store provider (the session factory's default
-    here; the HDFS-backed provider does not implement state v2) —
+    the RocksDB state-store provider (the session factory always
+    sets it; the HDFS-backed provider does not implement state v2) —
     callers on a vanilla session must set
     ``spark.sql.streaming.stateStore.providerClass`` before start.
     """

@@ -1333,7 +1333,8 @@ def test_stream_stream_join_sizes_to_four_stores_per_partition(spark):
     single-store-per-partition operator would — per-store commit
     overhead is what the budget bounds (profiled at sf0.1: 10
     partitions = 39.3 s summed state time, 4 partitions = 8.4 s,
-    identical output; tools/ab_interval_join.py)."""
+    identical output; SCALE.md "Streaming state-store tuning" and the
+    traced stream_state benchmark run)."""
     from pyspark.sql import functions as F
 
     from pulselake_a_lakehouse_based_fitbit_data_analysis_system_spark.streaming import (
@@ -6315,6 +6316,85 @@ def test_deletion_vector_survives_rebase(spark, tmp_path):
         rec = _json.load(f)
     assert rec["op"] == "delete_vectored"
     assert rec["n_rows"] == 1 and rec["rebased_onto"]
+
+
+_SEG_A_MUTATORS = {
+    "merge": lambda store, spark: store.merge(
+        "t", spark.createDataFrame([Row(k=0, seg="A", v=100)]), ["k"],
+        policy="scd1",
+    ),
+    "update": lambda store, spark: store.update(
+        "t", F.col("k") == 0, {"v": F.lit(100)}
+    ),
+    "delete": lambda store, spark: store.delete("t", F.col("k") == 0),
+    "replace_where": lambda store, spark: store.replace_where(
+        "t", F.col("k") == 0,
+        spark.createDataFrame([Row(k=0, seg="A", v=100)]),
+    ),
+    "optimize": lambda store, spark: store.optimize(
+        "t", partitions=["A"], key="k"
+    ),
+    "delete_vectored": lambda store, spark: store.delete_vectored(
+        "t", F.col("k") == 0
+    ),
+}
+
+
+@pytest.mark.parametrize("mutator", sorted(_SEG_A_MUTATORS))
+def test_partition_scoped_commit_carries_dv_and_version_files(
+    spark, tmp_path, mutator
+):
+    """Every partition-scoped mutator commits through the same path:
+    rows delete_vectored removed from a partition the mutation only
+    hard-links stay deleted, and the new version holds the same
+    per-version files as its parent, with fresh commit info."""
+    import json as _json
+
+    store = merge.TableStore(spark, str(tmp_path), keep_versions=4)
+    base = spark.createDataFrame(
+        [Row(k=i, seg="A" if i % 2 == 0 else "B", v=i) for i in range(20)]
+    )
+    store.write_partitioned("t", base, keys=["k"], partition_column="seg")
+    assert store.delete_vectored("t", F.col("k") == 1) == 1
+    parent = store.current_path("t")
+
+    _SEG_A_MUTATORS[mutator](store, spark)
+    cur = store.current_path("t")
+    assert cur != parent
+
+    got = {r["k"]: r["v"] for r in store.read("t").collect()}
+    assert 1 not in got
+    assert all(got[k] == k for k in range(3, 20, 2))
+    if mutator in ("delete", "delete_vectored"):
+        assert 0 not in got and len(got) == 18
+    else:
+        assert got[0] == (0 if mutator == "optimize" else 100)
+        assert len(got) == 19
+    # seg=B was hard-linked, not rewritten, and its DV entry carried
+    for fname in os.listdir(os.path.join(parent, "seg=B")):
+        assert os.path.samefile(
+            os.path.join(parent, "seg=B", fname),
+            os.path.join(cur, "seg=B", fname),
+        )
+    assert any(rel.startswith("seg=B/") for rel in store._load_dv(cur))
+
+    version_files = {
+        "_SCHEMA.json", "_OP.json", "_REWRITTEN.json", "_FILESTATS.json",
+        "_DV.json",
+    }
+    assert version_files <= set(os.listdir(parent))
+    assert version_files <= set(os.listdir(cur))
+    with open(os.path.join(cur, "_OP.json")) as f:
+        rec = _json.load(f)
+    assert rec["n_files"] == sum(
+        1 for _r, _d, fs in os.walk(cur) for fn in fs
+        if fn.endswith(".parquet")
+    )
+    assert rec["bytes"] > 0
+    with open(os.path.join(cur, "_REWRITTEN.json")) as f:
+        rw = _json.load(f)
+    assert rw["rewritten"] == ["seg=A"]
+    assert rw["based_on"] == os.path.basename(parent)
 
 
 def test_check_constraint_concurrent_adds_all_survive(spark, tmp_path):
