@@ -36,7 +36,7 @@ import shutil
 import time
 import uuid
 from collections.abc import Callable, Sequence
-from contextlib import contextmanager
+from contextlib import contextmanager, suppress
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -93,6 +93,42 @@ class ConcurrentWriteError(RuntimeError):
     would silently drop the other writer's version (a lost update),
     so the commit is refused; re-run the operation against the new
     current version (the standard optimistic-concurrency retry)."""
+
+
+@contextmanager
+def _flock(path: str, label: str, timeout: float):
+    """Hold an exclusive kernel ``flock`` on the persistent lock file
+    ``path``, polling until ``timeout`` seconds pass (then
+    ``TimeoutError`` naming ``label``).
+
+    flock is kernel-owned: the lock dies with its fd, so a holder that
+    crashes releases automatically and there is NO staleness heuristic
+    and NO break path. The O_EXCL + break-if-mtime-stale protocol it
+    replaced had a TOCTOU hole (round-9 verdict "What's wrong" #1):
+    two waiters could break the same stale lock, the second unlinking
+    the first's LIVE one and admitting a third writer — two
+    same-``based_on`` commits then both passed the CAS. With flock no
+    process ever manipulates another's lock; a frozen-but-alive holder
+    BLOCKS waiters until the timeout instead of being broken into
+    mid-critical-section (mutual exclusion is never traded for
+    liveness). The lock file is never unlinked: a later opener would
+    lock a NEW inode while waiters hold the old one — two holders."""
+    fd = os.open(path, os.O_CREAT | os.O_WRONLY)
+    try:
+        deadline = time.time() + timeout
+        while True:
+            try:
+                fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
+                break
+            except OSError:
+                if time.time() > deadline:
+                    raise TimeoutError(
+                        f"{label} held > {timeout:g}s"
+                    ) from None
+                time.sleep(0.005)
+        yield
+    finally:
+        os.close(fd)  # closing the fd releases the flock
 
 
 def _check_columns(target: DataFrame, source: DataFrame) -> None:
@@ -655,7 +691,18 @@ class TableStore:
     (commit info with ``n_files`` / ``bytes``), any staged change
     records (``_CDF_STAGED``) and ``_REWRITTEN.json`` (partitions
     touched, for partition-level conflict detection) — before the
-    ``_CURRENT`` pointer flips.
+    ``_CURRENT`` pointer flips. ``restore`` and the column-mapping
+    DDL build their versions from the same ``_link_parent`` and
+    ``_write_version_files`` steps, and ``write`` writes its file
+    stats before its flip. ``_BREAK.json`` holds the change feed's
+    schema break: a rename/drop/widen writes it into its version, and
+    the flip carries the current version's into every incoming one.
+    The rule: everything a commit changes in the table's versioned
+    state is in the version dir before the flip. Only
+    ``_publish_staged`` (moving staged change records into the feed),
+    ``_prune`` and the advisory ``build_*_sidecar`` indexes run after
+    it; table-level sidecars (``_SPEC``, ``_CONSTRAINTS``, ...) are
+    not versioned.
     """
 
     def __init__(
@@ -703,51 +750,15 @@ class TableStore:
 
     _LOCK_TIMEOUT_SECONDS = 30.0
 
-    @contextmanager
     def _commit_lock(self, name: str):
-        """Serialize the check-and-swap window with an ``flock`` on a
+        """Serialize the check-and-swap window with an ``_flock`` on a
         PERSISTENT lock file next to the pointer (held for
-        microseconds — two file ops — never across a Spark job).
-
-        flock is kernel-owned: the lock dies with its fd, so a writer
-        that crashes releases automatically and there is NO staleness
-        heuristic and NO break path at all. The previous O_EXCL +
-        break-if-mtime-stale protocol had a TOCTOU hole (round-9
-        verdict "What's wrong" #1): two waiters could both observe the
-        same stale lock, the first would break it and acquire a FRESH
-        one, and the second's ``os.unlink`` then removed the first's
-        LIVE lock — admitting a third writer concurrently and letting
-        two same-``based_on`` commits both pass the CAS (the exact
-        lost update OCC exists to prevent). Every repair of that
-        protocol (rename-to-unique breaking, owner tokens) still left
-        a window where a breaker could displace a freshly re-created
-        lock; flock removes the whole class because no process ever
-        manipulates another's lock. The flip side is intended
-        behavior: a frozen-but-alive holder now correctly BLOCKS
-        waiters until ``_LOCK_TIMEOUT_SECONDS`` (TimeoutError) instead
-        of being broken into mid-critical-section — mutual exclusion
-        is never traded for liveness. The lock file itself is never
-        unlinked (unlinking would let a later opener lock a NEW inode
-        while existing waiters hold the old one — two holders again);
-        one empty permanent file per table is the cost."""
-        lock = os.path.join(self.root, f"{name}._COMMITLOCK")
-        fd = os.open(lock, os.O_CREAT | os.O_WRONLY)
-        try:
-            deadline = time.time() + self._LOCK_TIMEOUT_SECONDS
-            while True:
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    break
-                except OSError:
-                    if time.time() > deadline:
-                        raise TimeoutError(
-                            f"commit lock for table {name!r} held > "
-                            f"{self._LOCK_TIMEOUT_SECONDS:g}s"
-                        ) from None
-                    time.sleep(0.005)
-            yield
-        finally:
-            os.close(fd)  # closing the fd releases the flock
+        microseconds — two file ops — never across a Spark job)."""
+        return _flock(
+            os.path.join(self.root, f"{name}._COMMITLOCK"),
+            f"commit lock for table {name!r}",
+            self._LOCK_TIMEOUT_SECONDS,
+        )
 
     def _commit_pointer(
         self,
@@ -796,9 +807,18 @@ class TableStore:
         lock). The OUTGOING current is ledgered before the flip (it
         was current, hence committed — heals a predecessor's crash
         between ITS flip and ITS ledger append), the new dir after
-        (see the staged-CDF protocol note)."""
+        (see the staged-CDF protocol note). The current version's
+        schema break carries into the incoming one when larger (a
+        fresh tmp+replace file, never a write through a shared link),
+        so the break never decreases."""
         if cur_base is not None:
             self._ledger_record(name, cur_base)
+            brk = self._load_break(os.path.join(self.root, cur_base))
+            incoming = os.path.join(self.root, version_dir)
+            if brk and brk > self._load_break(incoming):
+                self._write_json_sidecar(
+                    os.path.join(incoming, self._BREAKFILE), brk
+                )
         tmp_ptr = self._pointer(name) + ".tmp"
         with open(tmp_ptr, "w") as f:
             f.write(version_dir)
@@ -817,9 +837,10 @@ class TableStore:
         """Record WHICH partition dirs this version rewrote (vs
         hard-linked) and which version it derived from — the metadata
         partition-level conflict detection walks. Ops that rewrite
-        unbounded/unknown sets (create, OVERWRITE, RESTORE, clone)
-        simply don't write it; a missing sidecar reads as 'touched
-        everything', the conservative answer. ``neutral=True`` marks a
+        unbounded/unknown sets (create, OVERWRITE, clone) simply don't
+        write it (a RESTORE links its source's: same content, same
+        provenance); a missing sidecar reads as 'touched everything',
+        the conservative answer. ``neutral=True`` marks a
         commit that rewrote files but NOT logical content (OPTIMIZE /
         ZORDER compaction): the chain walk still proves the hop but
         contributes nothing to the conflict set, so compaction never
@@ -1078,6 +1099,7 @@ class TableStore:
             self._FILESTATS,
             self._SCHEMAFILE,
             self._COLMAPFILE,
+            self._BREAKFILE,
         ) or fname.startswith((self._BLOOM_PREFIX, self._MINMAX_PREFIX))
 
     def _link_parent(
@@ -1132,7 +1154,7 @@ class TableStore:
         op: str,
         *,
         stats_key: str | None,
-        schema: DataFrame | str,
+        schema: DataFrame | dict | str,
         colmap: dict | None = None,
         dv_add: dict | None = None,
         also_from: str | None = None,
@@ -1142,8 +1164,9 @@ class TableStore:
         ``parent``: merge-key file stats and the bloom/min-max
         sidecars carry the entries of files still linked (plus, for a
         rebase, ``also_from``'s), the deletion vector carries exactly
-        and unions ``dv_add``, the schema is ``schema``'s (a frame, or
-        a version dir whose sidecar is copied), the column mapping is
+        and unions ``dv_add``, the schema is ``schema``'s (a frame, a
+        schema JSON doc, or a version dir whose sidecar is copied),
+        the column mapping is
         ``colmap`` or the parent's, and the commit info goes last so
         its ``n_files``/``bytes`` describe the finished dir."""
         carriers = [parent] if also_from is None else [parent, also_from]
@@ -1152,7 +1175,7 @@ class TableStore:
         for src in carriers:
             self._carry_bloom_sidecars(src, full)
         self._carry_dv(parent, full, add=dv_add)
-        if isinstance(schema, DataFrame):
+        if not isinstance(schema, str):
             self._write_schema(full, schema)
         elif os.path.exists(os.path.join(schema, self._SCHEMAFILE)):
             shutil.copyfile(
@@ -1262,6 +1285,7 @@ class TableStore:
         _op: str = "write",
         _based_on: str | None = None,
         _stage: "Callable[[str], None] | None" = None,
+        _stats_key: str | None = None,
     ) -> None:
         df, idpins = self._apply_identity(name, df)
         try:
@@ -1276,6 +1300,8 @@ class TableStore:
         finally:
             self._release_pins(idpins)
         self._write_schema(full, df)
+        if _stats_key is not None:
+            self._write_file_stats(full, _stats_key)
         self._write_op(full, _op)
         # change rows STAGE into the version dir before the flip so
         # the commit publishes state and changes atomically (the
@@ -2322,21 +2348,11 @@ class TableStore:
         read n and stamp their change rows with the same version,
         silently merging two commits in every consumer's eyes."""
         vf = os.path.join(self.root, f"{name}._VERSION")
-        lock = os.path.join(self.root, f"{name}._VERSIONLOCK")
-        fd = os.open(lock, os.O_CREAT | os.O_WRONLY)
-        try:
-            deadline = time.time() + self._LOCK_TIMEOUT_SECONDS
-            while True:
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    break
-                except OSError:
-                    if time.time() > deadline:
-                        raise TimeoutError(
-                            f"version lock for table {name!r} held > "
-                            f"{self._LOCK_TIMEOUT_SECONDS:g}s"
-                        ) from None
-                    time.sleep(0.005)
+        with _flock(
+            os.path.join(self.root, f"{name}._VERSIONLOCK"),
+            f"version lock for table {name!r}",
+            self._LOCK_TIMEOUT_SECONDS,
+        ):
             n = 0
             if os.path.exists(vf):
                 with open(vf) as f:
@@ -2347,8 +2363,6 @@ class TableStore:
                 f.write(str(n))
             os.replace(tmp, vf)
             return n
-        finally:
-            os.close(fd)
 
     def _check_append_schema(self, name: str, cols, ver: int) -> bool:
         """Guard a changelog append against a CONCURRENT column-mapping
@@ -2402,33 +2416,6 @@ class TableStore:
         except (OSError, json.JSONDecodeError, ValueError):
             return []
 
-    @contextmanager
-    def _table_flock(self, name: str, suffix: str):
-        """Serialize a per-table sidecar read-modify-write with a
-        kernel flock on a dedicated persistent lock file (the
-        ``_next_commit_version`` protocol, factored): for sidecars
-        mutated OUTSIDE the commit lock, an unguarded RMW lets two
-        writers each read the old state and the second ``os.replace``
-        silently drop the first writer's change."""
-        lock = os.path.join(self.root, f"{name}.{suffix}")
-        fd = os.open(lock, os.O_CREAT | os.O_WRONLY)
-        try:
-            deadline = time.time() + self._LOCK_TIMEOUT_SECONDS
-            while True:
-                try:
-                    fcntl.flock(fd, fcntl.LOCK_EX | fcntl.LOCK_NB)
-                    break
-                except OSError:
-                    if time.time() > deadline:
-                        raise TimeoutError(
-                            f"{suffix} lock for table {name!r} held > "
-                            f"{self._LOCK_TIMEOUT_SECONDS:g}s"
-                        ) from None
-                    time.sleep(0.005)
-            yield
-        finally:
-            os.close(fd)
-
     def _add_feed_exclusion(self, name: str, ver: int) -> None:
         # flock-guarded read-modify-write: the callers (the changelog
         # pre-check and the post-publish re-check) run OUTSIDE the
@@ -2437,7 +2424,11 @@ class TableStore:
         # the first writer's exclusion — leaking one bad-schema commit
         # back into the feed as silent NULLs (round-13 ADVICE #3; the
         # same hazard _next_commit_version already flocks against).
-        with self._table_flock(name, "_EXCLLOCK"):
+        with _flock(
+            os.path.join(self.root, f"{name}._EXCLLOCK"),
+            f"_EXCLLOCK lock for table {name!r}",
+            self._LOCK_TIMEOUT_SECONDS,
+        ):
             vs = set(self.feed_exclusions(name))
             vs.add(int(ver))
             self._write_json_sidecar(self._exclusions_path(name), sorted(vs))
@@ -2711,15 +2702,7 @@ class TableStore:
         current = self.current_path(name)
         if current is None:
             raise FileNotFoundError(f"table {name} does not exist")
-        n_files = 0
-        n_bytes = 0
-        for root, dirs, fs in os.walk(current):
-            # staged change rows are feed data, not table data
-            dirs[:] = [d for d in dirs if d != self._STAGED_DIR]
-            for f in fs:
-                if f.endswith(".parquet"):
-                    n_files += 1
-                    n_bytes += os.path.getsize(os.path.join(root, f))
+        n_files, n_bytes = self._data_footprint(current)
         stats = self._load_file_stats(current)
         sidecars = sorted(
             fname[len(self._BLOOM_PREFIX):-len(".json")]
@@ -2967,6 +2950,18 @@ class TableStore:
 
     _OPFILE = "_OP.json"
 
+    def _data_footprint(self, version_full: str) -> tuple[int, int]:
+        """(parquet files, bytes) of a version's table data; staged
+        change rows are feed data and do not count."""
+        n_files = n_bytes = 0
+        for root, dirs, fs in os.walk(version_full):
+            dirs[:] = [d for d in dirs if d != self._STAGED_DIR]
+            for f in fs:
+                if f.endswith(".parquet"):
+                    n_files += 1
+                    n_bytes += os.path.getsize(os.path.join(root, f))
+        return n_files, n_bytes
+
     def _write_op(self, version_full: str, op: str, **details) -> None:
         """Record which operation created a version — the Delta-log
         commit-info analog behind ``history()``. Written with the
@@ -2978,16 +2973,11 @@ class TableStore:
         metadata walk of the just-written version dir, the same scale
         as the file-stats sidecar every partitioned commit already
         pays."""
-        n_files = 0
-        n_bytes = 0
         try:
-            for root, _dirs, fs in os.walk(version_full):
-                for f in fs:
-                    if f.endswith(".parquet"):
-                        n_files += 1
-                        n_bytes += os.path.getsize(os.path.join(root, f))
+            n_files, n_bytes = self._data_footprint(version_full)
         except OSError:
-            pass  # metrics are best-effort; the commit itself is not
+            # metrics are best-effort; the commit itself is not
+            n_files = n_bytes = 0
         rec = {
             "op": op,
             "ts": time.time(),
@@ -3033,17 +3023,21 @@ class TableStore:
 
     _SCHEMAFILE = "_SCHEMA.json"
 
-    def _write_schema(self, version_full: str, df: DataFrame) -> None:
-        """Persist the version's table schema (the Delta-log schema
-        analog). After a schema-evolution merge a version holds MIXED
-        parquet schemas — hard-linked pre-evolution files plus widened
-        new ones — and a plain read would surface whichever schema the
-        sampled footer has; reading with the stored schema fills the
-        old files' missing columns with NULLs instead."""
-        tmp = os.path.join(version_full, self._SCHEMAFILE + ".tmp")
-        with open(tmp, "w") as f:
-            f.write(df.schema.json())
-        os.replace(tmp, os.path.join(version_full, self._SCHEMAFILE))
+    def _write_schema(
+        self, version_full: str, schema: DataFrame | dict
+    ) -> None:
+        """Persist the version's table schema — a frame's, or a schema
+        JSON doc (the Delta-log schema analog). After a
+        schema-evolution merge a version holds MIXED parquet schemas —
+        hard-linked pre-evolution files plus widened new ones — and a
+        plain read would surface whichever schema the sampled footer
+        has; reading with the stored schema fills the old files'
+        missing columns with NULLs instead."""
+        if isinstance(schema, DataFrame):
+            schema = schema.schema.jsonValue()
+        self._write_json_sidecar(
+            os.path.join(version_full, self._SCHEMAFILE), schema
+        )
 
     def _stored_schema(self, version_full: str):
         p = os.path.join(version_full, self._SCHEMAFILE)
@@ -3282,12 +3276,14 @@ class TableStore:
     ) -> None:
         """Metadata-only commit of a new column mapping: every file of
         the current version hard-links into the new version dir (zero
-        data movement — at 100 TB a rename costs one sidecar write),
-        only ``_COLMAP.json`` and the commit info are fresh.
+        data movement — at 100 TB a rename costs one sidecar write)
+        and the per-version files are written as for every commit,
+        with ``cm`` (None keeps the current mapping) and
+        ``new_schema`` (None keeps the current schema).
 
         Per-column skipping sidecars are keyed by LOGICAL name, so
-        they follow the change: a rename links ``_BLOOM.old.json`` as
-        ``_BLOOM.new.json`` (the bitsets describe the same physical
+        they follow the change: a rename carries ``_BLOOM.old.json``
+        as ``_BLOOM.new.json`` (the bitsets describe the same physical
         column — pruning survives the rename), a drop leaves the
         column's sidecars behind. Carrying them verbatim would be
         actively WRONG, not just stale: re-binding a retired logical
@@ -3301,72 +3297,54 @@ class TableStore:
         'streaming read across a column mapping change' failure,
         surfaced as a contract instead of silent NULLs). The break is
         allocated BEFORE the pointer CAS (the flocked version counter
-        makes every later record allocation larger) but persisted only
-        AFTER it succeeds — a conflicting rename must not leave a
-        phantom break that silently truncates a feed whose schema
-        never changed."""
-        remap: dict[str, str] = {}
-        skip: set[str] = {self._OPFILE, self._REWRITTENFILE}
-        if cm is not None:
-            skip.add(self._COLMAPFILE)  # fresh mapping written below
-        if new_schema is not None:
-            skip.add(self._SCHEMAFILE)  # widened schema written below
+        makes every later record allocation larger) and written into
+        the new version dir, so it commits with the flip: a
+        conflicting or crashed rename leaves no phantom break that
+        silently truncates a feed whose schema never changed."""
+        version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
+        full = os.path.join(self.root, version_dir)
+        os.makedirs(full)
+        self._link_parent(current, full, {}, root_files=True)
+        self._write_version_files(
+            full,
+            current,
+            op,
+            stats_key=(self._load_file_stats(current) or {}).get("key"),
+            schema=current if new_schema is None else new_schema,
+            colmap=cm,
+            **details,
+        )
+        moves: dict[str, str | None] = {}
+        for prefix in (self._BLOOM_PREFIX, self._MINMAX_PREFIX):
+            if renamed is not None:
+                moves[f"{prefix}{renamed[0]}.json"] = (
+                    f"{prefix}{renamed[1]}.json"
+                )
+            if dropped is not None:
+                moves[f"{prefix}{dropped}.json"] = None
         if drop_bloom_for is not None:
             # a bloom bitset hashes TYPED values (xxhash64 is
             # type-sensitive): bitsets built under the old width can
             # never match probes cast to the new one — false-negative
             # pruning would DROP rows, so the widen retires them
             # (min/max sidecars compare numerically and carry fine)
-            skip.add(f"{self._BLOOM_PREFIX}{drop_bloom_for}.json")
-        for prefix in (self._BLOOM_PREFIX, self._MINMAX_PREFIX):
-            if renamed is not None:
-                remap[f"{prefix}{renamed[0]}.json"] = (
-                    f"{prefix}{renamed[1]}.json"
-                )
-            if dropped is not None:
-                skip.add(f"{prefix}{dropped}.json")
-        version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
-        full = os.path.join(self.root, version_dir)
-        os.makedirs(full)
-        for base, dirs, files in os.walk(current):
-            # never carry another commit's staged change records
-            dirs[:] = [d for d in dirs if d != self._STAGED_DIR]
-            rel = os.path.relpath(base, current)
-            dst = full if rel == "." else os.path.join(full, rel)
-            os.makedirs(dst, exist_ok=True)
-            for fname in files:
-                if fname in skip or fname == self._STAGED_MANIFEST:
-                    continue
-                os.link(
-                    os.path.join(base, fname),
-                    os.path.join(dst, remap.get(fname, fname)),
-                )
-        self._write_colmap(full, cm)
-        if new_schema is not None:
+            moves[f"{self._BLOOM_PREFIX}{drop_bloom_for}.json"] = None
+        for src, dst in moves.items():
+            with suppress(FileNotFoundError):
+                if dst is None:
+                    os.unlink(os.path.join(full, src))
+                else:
+                    os.rename(
+                        os.path.join(full, src), os.path.join(full, dst)
+                    )
+        if schema_break and self._changelog_enabled(name):
             self._write_json_sidecar(
-                os.path.join(full, self._SCHEMAFILE), new_schema
+                os.path.join(full, self._BREAKFILE),
+                self._next_commit_version(name),
             )
-        self._write_op(full, op, **details)
-        brk = (
-            self._next_commit_version(name)
-            if schema_break and self._changelog_enabled(name)
-            else None
-        )
-        # two-phase break (r14, see the schema-break section note):
-        # STAGE {break, dir} before the flip, PROMOTE after — a crash
-        # on either side reads correctly (committed pending == the
-        # break; uncommitted pending == nothing), where each
-        # single-phase order had a wrong residue (post-flip set:
-        # committed rename with no break = the feed silently SPLITS
-        # the renamed column; pre-flip set: a crashed or CAS-beaten
-        # flip spuriously restarted the feed)
-        if brk is not None:
-            self._stage_schema_break(name, version_dir, brk)
         self._commit_pointer(
             name, version_dir, based_on=os.path.basename(current)
         )
-        if brk is not None:
-            self._settle_pending_break(name)
         self._prune(name, keep=version_dir)
 
     def rename_column(self, name: str, old: str, new: str) -> None:
@@ -3381,7 +3359,7 @@ class TableStore:
         hard-linked old ones. Partition-spec key/column and
         constraint-referenced columns are frozen (see
         ``_colmap_guard``); per-column skipping sidecars FOLLOW the
-        rename (``_BLOOM.old.json`` links forward as
+        rename (``_BLOOM.old.json`` carries forward as
         ``_BLOOM.new.json`` — same physical column, pruning
         survives)."""
         current = self.current_path(name)
@@ -3654,111 +3632,34 @@ class TableStore:
 
     # --- changelog schema-break (column mapping x CDF) --------------------
     #
-    # The break commits in TWO phases, mirroring the staged-CDF
-    # protocol (r14): the DDL STAGES a pending break (break version +
-    # its version dir) before the pointer flip and PROMOTES it after;
-    # committed-ness of the pending dir is decided by the pointer +
-    # the _COMMITS ledger, exactly like staged change rows. Either
-    # single-phase order has a wrong crash residue: break-after-flip
-    # left a committed rename with NO break (feed reads fall back to
-    # mergeSchema across the rename and SPLIT the logical column —
-    # old records show the old name with the new one NULL, new
-    # records the reverse: silent NULLs), while break-before-flip
-    # restarted the feed spuriously whenever the flip crashed or lost
-    # its CAS (consumers re-bootstrap over a rename that never
-    # happened). The pending file makes both residues correct: a
-    # committed-but-unpromoted pending reads as the break (and
-    # promotes at the next touch), an uncommitted one reads as
-    # nothing (and is overwritten by the next DDL's stage).
+    # The break lives IN the version, like the rest of a commit's
+    # metadata: the rename/drop/widen DDL writes the break it
+    # allocated into its new version dir before the pointer flip, and
+    # ``_flip_pointer`` carries max(current's, incoming's) into every
+    # incoming version under the commit lock, so the break never
+    # decreases. It lands atomically with the DDL: a crash before the
+    # flip leaves an uncommitted dir (no break, no spurious feed
+    # restart), a crash after it leaves the break committed (feed
+    # reads never fall back to mergeSchema across the rename, which
+    # would SPLIT the logical column into silent NULLs), and a
+    # CAS-beaten DDL's dir is removed together with its break.
 
-    def _schema_break_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._SCHEMA_BREAK")
+    _BREAKFILE = "_BREAK.json"
 
-    def _pending_break_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._SCHEMA_BREAK_PENDING")
-
-    def _raw_schema_break(self, name: str) -> int:
+    def _load_break(self, version_full: str) -> int:
         try:
-            with open(self._schema_break_path(name)) as f:
-                return int(f.read().strip() or 0)
-        except (OSError, ValueError):
+            with open(os.path.join(version_full, self._BREAKFILE)) as f:
+                return int(json.load(f))
+        except (OSError, ValueError, TypeError):
             return 0
 
     def schema_break_version(self, name: str) -> int:
         """First changelog commit version whose records carry the
-        CURRENT logical schema — advanced by every rename/drop on a
-        changelog table; 0 when the feed never crossed one. Settles a
-        pending break first (promote if its dir committed, ignore
-        scratch), so readers see the break the moment the DDL's flip
-        lands even if the promoting process died in between."""
-        if os.path.exists(self._pending_break_path(name)):
-            self._settle_pending_break(name)
-        return self._raw_schema_break(name)
-
-    def _write_raw_break_locked(self, name: str, version: int) -> None:
-        # caller holds the _BREAKLOCK flock
-        version = max(version, self._raw_schema_break(name))
-        tmp = self._schema_break_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(version))
-        os.replace(tmp, self._schema_break_path(name))
-
-    def _settle_pending_break(self, name: str) -> None:
-        """Promote a pending break whose version dir COMMITTED (it is
-        current or ledgered), discard one the raw break already
-        covers, leave pre-flip scratch (the next DDL's stage
-        overwrites it). Flocked: promotion is a read-modify-write
-        racing the DDL's own post-flip promotion and concurrent
-        readers."""
-        with self._table_flock(name, "_BREAKLOCK"):
-            p = self._pending_break_path(name)
-            try:
-                with open(p) as f:
-                    pend = json.load(f)
-            except (OSError, json.JSONDecodeError):
-                return
-            ver = int(pend.get("version", 0))
-            d = pend.get("dir")
-            if ver <= self._raw_schema_break(name):
-                try:
-                    os.unlink(p)
-                except OSError:
-                    pass
-                return
-            cur = self.current_path(name)
-            committed = (
-                cur is not None and d == os.path.basename(cur)
-            ) or d in self._committed_versions(name)
-            if not committed:
-                return  # pre-flip scratch: reads as no break at all
-            self._write_raw_break_locked(name, ver)
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-
-    def _stage_schema_break(
-        self, name: str, version_dir: str, version: int
-    ) -> None:
-        """Pre-flip half: persist {version, dir} as the pending break.
-        Settles any previous pending first (a committed one must
-        promote, never be clobbered by this stage)."""
-        self._settle_pending_break(name)
-        with self._table_flock(name, "_BREAKLOCK"):
-            self._write_json_sidecar(
-                self._pending_break_path(name),
-                {"version": int(version), "dir": version_dir},
-            )
-
-    def _set_schema_break(self, name: str, version: int) -> None:
-        # flocked: runs outside the commit lock, so without the guard
-        # a stalled writer could regress a faster successor's HIGHER
-        # break (both read old, max() each against stale state, last
-        # os.replace wins) — claiming intermediate-schema records
-        # already carry the current schema, the silent-NULL class
-        # (r14; the ADVICE-#3 hazard one sidecar over)
-        with self._table_flock(name, "_BREAKLOCK"):
-            self._write_raw_break_locked(name, version)
+        CURRENT logical schema — advanced by every rename/drop/widen
+        on a changelog table; 0 when the feed never crossed one. Read
+        from the current version."""
+        cur = self.current_path(name)
+        return 0 if cur is None else self._load_break(cur)
 
     # --- file-level min/max pruning (Delta data-skipping analog) ----------
 
@@ -4014,8 +3915,9 @@ class TableStore:
         else:
             part_col = spec["column"]
         df = df.repartitionByRange(F.col(part_col), F.col(keys[0]))
-        self.write(name, df, partition_by=[part_col], _op=op)
-        self._write_file_stats(self.current_path(name), keys[0])
+        self.write(
+            name, df, partition_by=[part_col], _op=op, _stats_key=keys[0]
+        )
 
     def _merge_partitioned(
         self,
@@ -4737,8 +4639,15 @@ class TableStore:
                     d = full if rel == "." else os.path.join(full, rel)
                     os.makedirs(d, exist_ok=True)
                     for fname in files:
-                        if fname in (self._OPFILE, self._STAGED_MANIFEST):
-                            continue  # the clone writes its own commit info
+                        # the clone writes its own commit info, and
+                        # its feed (own version counter) starts with
+                        # no schema break
+                        if fname in (
+                            self._OPFILE,
+                            self._STAGED_MANIFEST,
+                            self._BREAKFILE,
+                        ):
+                            continue
                         (shutil.copy2 if deep else os.link)(
                             os.path.join(base, fname), os.path.join(d, fname)
                         )
@@ -4795,10 +4704,10 @@ class TableStore:
         restore is itself a NEW version (history stays append-only,
         so a restore can be restored away again and ``versions()``
         ordering holds);
-        it costs zero data movement — every file of the source
-        version, including the schema and data-skipping sidecars, is
-        hard-linked into the new version dir — and no Spark job unless
-        the changelog is on.
+        it costs zero data movement — every data file of the source
+        version is hard-linked into the new version dir and its schema
+        and data-skipping sidecars carry over — and no Spark job
+        unless the changelog is on.
 
         With the table's changelog enabled, pass ``keys``: the restore
         commits the row-level diff current→restored so incremental
@@ -4847,18 +4756,20 @@ class TableStore:
         version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
         full = os.path.join(self.root, version_dir)
         os.makedirs(full)
-        for base, dirs, files in os.walk(src):
-            # never carry the source commit's staged change records —
-            # they were staged for a different commit (foreign owner)
-            dirs[:] = [d for d in dirs if d != self._STAGED_DIR]
-            rel = os.path.relpath(base, src)
-            dst = full if rel == "." else os.path.join(full, rel)
-            os.makedirs(dst, exist_ok=True)
-            for fname in files:
-                if fname == self._STAGED_MANIFEST:
-                    continue
-                os.link(os.path.join(base, fname), os.path.join(dst, fname))
-        self._write_op(full, "restore", source=version)
+        self._link_parent(src, full, {}, root_files=True)
+        self._write_version_files(
+            full,
+            src,
+            "restore",
+            stats_key=(self._load_file_stats(src) or {}).get("key"),
+            schema=src,
+            source=version,
+        )
+        # the source's partition provenance (what it rewrote relative
+        # to its parent) holds for the restored content as well
+        rewritten = os.path.join(src, self._REWRITTENFILE)
+        if os.path.exists(rewritten):
+            os.link(rewritten, os.path.join(full, self._REWRITTENFILE))
         if log_changes:
             # staged pre-flip (crash-atomic CDF): the rollback diff
             # reads the new dir directly

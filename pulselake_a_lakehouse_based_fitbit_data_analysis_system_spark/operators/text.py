@@ -1,7 +1,8 @@
 """Text-analysis operators for training-data pipelines.
 
 All pure Column expressions (JVM-side, codegen'd — no Python in the
-hot path): tokenization, token/char statistics, stopword ratio, n-gram language ID, and md5 document fingerprinting.
+hot path): tokenization, token/char statistics, n-gram language ID
+and md5 document fingerprinting.
 Formulas are deliberately ANSI-portable so each operator is
 oracle-checkable against DuckDB.
 
@@ -51,21 +52,6 @@ def bpe_token_count(text: Column | str) -> Column:
     """Count of BPE-ish pre-tokens via regexp extraction."""
     c = F.col(text) if isinstance(text, str) else text
     return F.size(F.regexp_extract_all(c, F.lit(BPE_TOKEN_PATTERN), 0))
-
-
-def avg_token_length(text: Column | str) -> Column:
-    """Mean token length = non-space chars / token count (exact for
-    single-space-separated text)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(F.replace(c, F.lit(" "), F.lit(""))) / token_count(c)
-
-
-def stopword_ratio(
-    text: Column | str, stopwords: tuple[str, ...] = STOPWORDS_EN
-) -> Column:
-    toks = tokens(text)
-    stops = F.filter(toks, lambda t: t.isin(*stopwords))
-    return F.size(stops) / F.size(toks)
 
 
 def lang_scores(text: Column | str) -> dict[str, Column]:
@@ -312,8 +298,7 @@ def text_profile(df: DataFrame, text_col: str = "text") -> DataFrame:
 
     The token array is materialized ONCE into a scratch column and
     every metric reads it — the naive per-metric ``split`` re-tokenizes
-    the document ~8× (measured ~4× slower at sf0.1). Same output as
-    composing the standalone helpers."""
+    the document ~8× (measured ~4× slower at sf0.1)."""
     toks = F.col("__toks")
     n = F.size(toks)
     stops = F.size(F.filter(toks, lambda t: t.isin(*STOPWORDS_EN)))

@@ -493,23 +493,77 @@ def test_feed_exclusion_concurrent_adds_all_survive(spark, tmp_path):
 
 def test_schema_break_concurrent_sets_are_monotone(spark, tmp_path):
     """Lost-update pin (r14, the ADVICE-#3 hazard one sidecar over):
-    _set_schema_break runs after the DDL flip outside the commit lock;
-    concurrent setters must never regress the break — final value is
-    the max ever written, under any interleaving."""
+    the break travels inside each version and the pointer flip carries
+    max(current, incoming) under the commit lock — concurrent commits
+    carrying different breaks must never regress it: the final value
+    is the max ever committed, under any interleaving."""
+    import os as _os
+    import shutil
     import threading
 
     store = _store(spark, tmp_path)
+    store.write("t", spark.createDataFrame([Row(k=1, v=1)]))
+    base = store.current_path("t")
     vers = list(range(1, 33))
 
     def setv(v):
-        store._set_schema_break("t", v)
+        vdir = f"t.v{uuid.uuid4().hex[:12]}"
+        full = _os.path.join(store.root, vdir)
+        shutil.copytree(base, full)
+        store._write_json_sidecar(_os.path.join(full, "_BREAK.json"), v)
+        store._commit_pointer("t", vdir)
 
     threads = [threading.Thread(target=setv, args=(v,)) for v in vers]
     for t in threads:
         t.start()
     for t in threads:
-        t.join()
+        t.join(timeout=120)
+        assert not t.is_alive()
     assert store.schema_break_version("t") == max(vers)
+    assert [r["v"] for r in store.read("t").collect()] == [1]
+
+
+def test_schema_break_survives_later_commits(spark, tmp_path):
+    """The schema break lives in the current version, so every later
+    commit carries it: a merge, a rebase over a disjoint-partition
+    commit, a restore to a pre-break version and an unpartitioned
+    overwrite through write() never lower it. A clone starts its own
+    feed, at break 0."""
+    import os as _os
+
+    store = TableStore(spark, str(tmp_path), keep_versions=8,
+                       changelog=True)
+    store.write_partitioned("t", spark.createDataFrame(
+        [(i, "AB"[i % 2], 0) for i in range(8)], "k long, seg string, v int"
+    ), keys=["k"], partition_column="seg")
+    pre = _os.path.basename(store.current_path("t"))
+    store.widen_column("t", "v", "bigint")
+    brk = store.schema_break_version("t")
+    assert brk > 0
+
+    def merge(k, seg):
+        store.merge("t", spark.createDataFrame(
+            [(k, seg, 1)], "k long, seg string, v long"
+        ), ["k"], policy="scd1")
+        return store.schema_break_version("t")
+
+    assert merge(0, "A") == brk
+    # rebase: a stale writer on seg=B lands over a seg=A commit
+    snap = store.current_path("t")
+    merge(2, "A")
+    orig, stale = store.current_path, iter([snap, snap])
+    store.current_path = lambda name: next(stale, None) or orig(name)
+    try:
+        assert merge(1, "B") == brk
+    finally:
+        del store.current_path
+    assert "rebased_onto" in store.history("t").collect()[-1]["details"]
+    store.restore("t", version=pre, keys=["k"])
+    assert store.schema_break_version("t") == brk
+    store.write("t", store.read("t"))
+    assert store.schema_break_version("t") == brk
+    store.clone("t", "c")
+    assert store.schema_break_version("c") == 0
 
 
 def test_publish_heal_preserves_version_history_order(spark, tmp_path,
@@ -548,14 +602,14 @@ def test_publish_heal_preserves_version_history_order(spark, tmp_path,
 
 def test_rename_crash_never_splits_feed_column(spark, tmp_path,
                                                monkeypatch):
-    """The rename-vs-break crash windows (r14): the break commits in
-    TWO phases (stage pending before the flip, promote after), because
-    each single-phase order has a wrong crash residue — break-after-
-    flip left a committed rename with NO break, so feed reads fell
-    back to mergeSchema across the rename and SPLIT the logical column
-    (silent NULLs); break-before-flip spuriously restarted the feed
-    whenever the flip crashed or lost its CAS. Both crash sides must
-    read correctly."""
+    """The rename-vs-break crash windows (r14): the break is written
+    into the rename's version dir and commits with its pointer flip,
+    because a break set after the flip left a committed rename with
+    NO break on a crash (feed reads fell back to mergeSchema across
+    the rename and SPLIT the logical column — silent NULLs), and a
+    break set before it spuriously restarted the feed whenever the
+    flip crashed or lost its CAS. Both crash sides must read
+    correctly."""
     import pytest as _pytest
 
     store = _store(spark, tmp_path)
@@ -565,7 +619,7 @@ def test_rename_crash_never_splits_feed_column(spark, tmp_path,
     store.merge("t", spark.createDataFrame([Row(k=3, val=30)]), ["k"],
                 policy="scd1")
 
-    # -- crash side 1: pending staged, flip never happened --
+    # -- crash side 1: version dir built, flip never happened --
     def boom(self, *a, **kw):
         raise RuntimeError("injected crash mid-DDL")
 
@@ -574,8 +628,8 @@ def test_rename_crash_never_splits_feed_column(spark, tmp_path,
         store.rename_column("t", "val", "metric")
     monkeypatch.undo()
 
-    # uncommitted pending reads as NO break: the feed is untouched —
-    # no spurious restart, no column split
+    # an uncommitted version's break reads as NO break: the feed is
+    # untouched — no spurious restart, no column split
     assert store.schema_break_version("t") == 0
     assert store.read("t").columns == ["k", "val"]
     feed = store.read_changes("t")
@@ -583,23 +637,17 @@ def test_rename_crash_never_splits_feed_column(spark, tmp_path,
                                  "_commit_version"}
     assert feed.count() == 3 and feed.filter("val IS NULL").count() == 0
 
-    # -- crash side 2: flip landed, promotion never ran --
-    monkeypatch.setattr(TableStore, "_settle_pending_break",
-                        lambda self, name: None)
-    store.rename_column("t", "val", "metric")
+    # -- crash side 2: flip landed, the post-flip steps never ran --
+    pre_max = feed.agg({"_commit_version": "max"}).first()[0]
+    monkeypatch.setattr(TableStore, "_prune", boom)
+    with _pytest.raises(RuntimeError, match="injected crash"):
+        store.rename_column("t", "val", "metric")
     monkeypatch.undo()
-    import json as _json
-    import os as _os
 
-    pend_path = store._pending_break_path("t")
-    assert _os.path.exists(pend_path), "pending break did not stage"
-    pend = _json.loads(open(pend_path).read())
-
-    # committed pending READS as the break (and promotes on touch):
-    # the feed restarts at the rename exactly like the crash-free
-    # path — never a split column
-    assert store.schema_break_version("t") == pend["version"]
-    assert not _os.path.exists(pend_path), "touch did not promote"
+    # the break committed with the flip: the feed restarts at the
+    # rename exactly like the crash-free path — never a split column
+    assert store.read("t").columns == ["k", "metric"]
+    assert store.schema_break_version("t") > pre_max
     store.merge("t", spark.createDataFrame([Row(k=4, metric=40)]),
                 ["k"], policy="scd1")
     feed2 = store.read_changes("t")

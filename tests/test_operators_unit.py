@@ -6115,52 +6115,88 @@ def test_history_operation_metrics(spark, tmp_path):
     """history() details carry the operationMetrics analog: every
     version records its physical n_files/bytes at commit time, and a
     rebase's commit info describes the MERGED dir (with rebase
-    provenance), not a copy of the stale writer's."""
+    provenance), not a copy of the stale writer's — on a changelog
+    table too, whose staged change rows ride the rebase but are not
+    table files."""
     import json as _json
 
-    store = merge.TableStore(spark, str(tmp_path), keep_versions=8)
-    base = spark.createDataFrame(
-        [Row(k=i, seg="A" if i % 2 == 0 else "B", v=0) for i in range(40)]
-    )
-    store.write_partitioned("t", base, keys=["k"], partition_column="seg")
-    store.merge("t", spark.createDataFrame([Row(k=0, seg="A", v=1)]), ["k"],
-                policy="scd1")
-    for r in store.history("t").collect():
-        d = _json.loads(r["details"])
-        assert d["n_files"] >= 1 and d["bytes"] > 0, r
-
-    # rebase: stale writer on seg=B while seg=A moved ahead
-    snap = store.current_path("t")
-    store.merge("t", spark.createDataFrame([Row(k=2, seg="A", v=2)]), ["k"],
-                policy="scd1")
-    calls = {"n": 0}
-    orig = store.current_path
-
-    def stale_once(name):
-        if name == "t" and calls["n"] < 2:
-            calls["n"] += 1
-            return snap
-        return orig(name)
-
-    store.current_path = stale_once
-    try:
-        store.merge("t", spark.createDataFrame([Row(k=1, seg="B", v=-1)]),
+    for changelog in (False, True):
+        store = merge.TableStore(spark, str(tmp_path / f"cl{changelog}"),
+                                 keep_versions=8, changelog=changelog)
+        base = spark.createDataFrame(
+            [Row(k=i, seg="A" if i % 2 == 0 else "B", v=0) for i in range(40)]
+        )
+        store.write_partitioned("t", base, keys=["k"], partition_column="seg")
+        store.merge("t", spark.createDataFrame([Row(k=0, seg="A", v=1)]),
                     ["k"], policy="scd1")
-    finally:
-        del store.current_path
-    reb = store.current_path("t")
-    with open(os.path.join(reb, "_OP.json")) as f:
-        rec = _json.load(f)
-    assert rec["op"] == "merge:scd1"
-    assert rec["rebased_onto"] is not None
-    # metrics cover the whole merged dir: both partitions' files
-    n_disk = sum(
-        1
-        for root, _d, fs in os.walk(reb)
-        for fname in fs
-        if fname.endswith(".parquet")
-    )
-    assert rec["n_files"] == n_disk >= 2
+        for r in store.history("t").collect():
+            d = _json.loads(r["details"])
+            assert d["n_files"] >= 1 and d["bytes"] > 0, r
+
+        # rebase: stale writer on seg=B while seg=A moved ahead
+        snap = store.current_path("t")
+        store.merge("t", spark.createDataFrame([Row(k=2, seg="A", v=2)]),
+                    ["k"], policy="scd1")
+        calls = {"n": 0}
+        orig = store.current_path
+
+        def stale_once(name):
+            if name == "t" and calls["n"] < 2:
+                calls["n"] += 1
+                return snap
+            return orig(name)
+
+        store.current_path = stale_once
+        try:
+            store.merge("t",
+                        spark.createDataFrame([Row(k=1, seg="B", v=-1)]),
+                        ["k"], policy="scd1")
+        finally:
+            del store.current_path
+        reb = store.current_path("t")
+        with open(os.path.join(reb, "_OP.json")) as f:
+            rec = _json.load(f)
+        assert rec["op"] == "merge:scd1"
+        assert rec["rebased_onto"] is not None
+        # metrics cover the whole merged dir: both partitions' files
+        n_disk = sum(
+            1
+            for root, _d, fs in os.walk(reb)
+            for fname in fs
+            if fname.endswith(".parquet")
+        )
+        assert rec["n_files"] == n_disk >= 2, changelog
+        assert store.detail("t")["num_files"] == n_disk, changelog
+
+
+def test_partitioned_create_flips_with_file_stats(spark, tmp_path,
+                                                 monkeypatch):
+    """A partitioned create writes its merge-key file stats into the
+    version before the pointer flip: the version is complete the
+    moment it becomes current (a replace and a merge-created table
+    included), and the stats cover every data file."""
+    import json as _json
+
+    store = merge.TableStore(spark, str(tmp_path), keep_versions=4)
+    at_flip = []
+    real = merge.TableStore._flip_pointer
+
+    def spy(self, name, cur_base, version_dir):
+        full = os.path.join(self.root, version_dir)
+        at_flip.append(os.path.exists(os.path.join(full, "_FILESTATS.json")))
+        real(self, name, cur_base, version_dir)
+
+    monkeypatch.setattr(merge.TableStore, "_flip_pointer", spy)
+    df = spark.createDataFrame([Row(k=i, v=i) for i in range(20)])
+    store.write_partitioned("t", df, keys=["k"], n_buckets=4)
+    store.write_partitioned("t", df, keys=["k"], n_buckets=2)
+    store.declare_partitioning("m", keys=["k"], n_buckets=4)
+    store.merge("m", df, ["k"], policy="scd1")
+    assert at_flip == [True, True, True]
+    with open(os.path.join(store.current_path("t"), "_FILESTATS.json")) as f:
+        stats = _json.load(f)
+    assert stats["key"] == "k"
+    assert len(stats["files"]) == store.detail("t")["num_files"]
 
 
 def test_deletion_vectors_merge_on_read(spark, tmp_path):

@@ -1423,8 +1423,9 @@ def _fuzz_schema_crash_lifecycle(spark, root, seed, executed):
     """One seed of the changelog-enabled SCHEMA crash fuzz (r14):
     renames/widens/adds/drops interleave with SCD-1 merges while DDL
     crash points are randomly injected — 'ddl_preflip' (the commit
-    pointer raises after the pending break staged) and 'ddl_presettle'
-    (the flip lands, promotion never runs). After every step the table
+    pointer raises after the version dir, break included, is built)
+    and 'ddl_postflip' (the flip lands, the post-flip prune raises).
+    After every step the table
     must equal the model AND the change feed must never show a SPLIT
     column: its columns are exactly the current logical schema + the
     two meta columns, regardless of which crash residue is live."""
@@ -1478,7 +1479,7 @@ def _fuzz_schema_crash_lifecycle(spark, root, seed, executed):
         verb = rng.choice(["merge", "merge", "rename", "widen_add",
                            "drop", "rename", "merge"])
         point = (
-            rng.choice(["ddl_preflip", "ddl_presettle"])
+            rng.choice(["ddl_preflip", "ddl_postflip"])
             if verb in ("rename", "drop") and rng.random() < 0.5
             else None
         )
@@ -1515,21 +1516,26 @@ def _fuzz_schema_crash_lifecycle(spark, root, seed, executed):
                     TableStore._commit_pointer = real
                 executed.add("crash:ddl_preflip")
                 # rename never landed: model unchanged
-            elif point == "ddl_presettle":
-                real = TableStore._settle_pending_break
-                TableStore._settle_pending_break = (
-                    lambda self, name: None
-                )
+            elif point == "ddl_postflip":
+                real = TableStore._prune
+
+                def boom(self, *a, **kw):
+                    raise _InjectedCrash("ddl_postflip")
+
+                TableStore._prune = boom
                 try:
-                    store.rename_column("t", old, new)
+                    import pytest as _pytest
+
+                    with _pytest.raises(_InjectedCrash):
+                        store.rename_column("t", old, new)
                 finally:
-                    TableStore._settle_pending_break = real
+                    TableStore._prune = real
                 retired.add(old)
                 cols[cols.index(old)] = new
                 for v in model.values():
                     if old in v:
                         v[new] = v.pop(old)
-                executed.add("crash:ddl_presettle")
+                executed.add("crash:ddl_postflip")
             else:
                 store.rename_column("t", old, new)
                 retired.add(old)
@@ -1576,7 +1582,7 @@ def _fuzz_schema_crash_lifecycle(spark, root, seed, executed):
 def test_store_schema_crash_fuzz_model_check(spark, tmp_path):
     """Changelog-enabled SCHEMA lifecycle fuzz with DDL crash-point
     injection (r14): rename/add/drop interleaved with merges while the
-    two-phase break protocol is crashed at both sides — the table must
+    DDL commit is crashed on both sides of its flip — the table must
     equal the model and the feed must never split a renamed column,
     under any interleaving of crash residues with further DDL and
     DML."""
@@ -1586,4 +1592,4 @@ def test_store_schema_crash_fuzz_model_check(spark, tmp_path):
             spark, str(tmp_path / f"sc{seed}"), seed, executed
         )
     assert {"merge", "rename", "crash:ddl_preflip",
-            "crash:ddl_presettle"} <= executed, executed
+            "crash:ddl_postflip"} <= executed, executed
