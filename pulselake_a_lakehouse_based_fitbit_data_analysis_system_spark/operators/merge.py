@@ -11,10 +11,9 @@ Every reference MERGE is one of four shapes (SURVEY §2.8):
 Design: merge *semantics* are pure DataFrame→DataFrame functions
 (compute the post-merge state), so they are testable and
 oracle-checkable; *persistence* is a separate concern behind
-``TableStore``. On OSS Delta (not in this container) the same policies
-map 1:1 onto ``DeltaTable.merge`` — see ``delta_merge`` at the bottom,
-gated behind an import-try. The pure-DataFrame forms are how the
-engine expresses merges over plain parquet.
+``TableStore``. On OSS Delta the same policies map 1:1 onto
+``DeltaTable.merge``; the pure-DataFrame forms are how the engine
+expresses merges over plain parquet.
 
 Scale notes: each merge is (a) an optional per-key latest-record
 reduction of the source (small), then (b) ONE shuffle join between
@@ -701,8 +700,15 @@ class TableStore:
     state is in the version dir before the flip. Only
     ``_publish_staged`` (moving staged change records into the feed),
     ``_prune`` and the advisory ``build_*_sidecar`` indexes run after
-    it; table-level sidecars (``_SPEC``, ``_CONSTRAINTS``, ...) are
-    not versioned.
+    it. Table-level state is not versioned: it lives in one document,
+    ``{name}._TABLE.json``, whose keys are the declarations ``spec``
+    (partitioning), ``constraints``, ``generated``, ``identity``,
+    ``properties`` and ``changelog`` (the per-table feed flag) and the
+    feed bookkeeping ``version`` (commit counter), ``commits`` (the
+    ``_COMMITS`` ledger), ``feed_exclusions`` and ``min_retained``
+    (the vacuum cursor). A clone inherits the declarations and starts
+    with empty feed keys. Every change to the document is a
+    read-modify-write under the commit lock (``_edit_table_state``).
     """
 
     def __init__(
@@ -725,22 +731,8 @@ class TableStore:
         # occur (the store is append/upsert-only), so the reference's
         # ``ignoreDeletes`` tolerance holds by construction.
         self.changelog = changelog
-        if changelog and keep_versions < 2:
-            # the merge-diff reads the pre-merge version after the
-            # pointer flip; retention must keep it alive
-            raise ValueError("changelog requires keep_versions >= 2")
-        if changelog and keep_versions > self._LEDGER_KEEP:
-            # a retained version dir must never outlive its _COMMITS
-            # ledger entry: the publish pass treats a staged,
-            # non-current, non-ledgered dir as pre-flip scratch, so a
-            # crashed publish older than the ledger trim would turn
-            # into silently dropped change rows — the exact failure
-            # the staged-CDF protocol exists to prevent (round-13
-            # verdict "What's wrong" #2)
-            raise ValueError(
-                f"changelog requires keep_versions <= {self._LEDGER_KEEP} "
-                f"(the _COMMITS ledger trim); got {keep_versions}"
-            )
+        if changelog:
+            self._check_changelog_retention()
         os.makedirs(root, exist_ok=True)
 
     def _pointer(self, name: str) -> str:
@@ -751,13 +743,41 @@ class TableStore:
     _LOCK_TIMEOUT_SECONDS = 30.0
 
     def _commit_lock(self, name: str):
-        """Serialize the check-and-swap window with an ``_flock`` on a
-        PERSISTENT lock file next to the pointer (held for
-        microseconds — two file ops — never across a Spark job)."""
+        """Serialize the table's check-and-swap window and every change
+        to its state document with an ``_flock`` on a PERSISTENT lock
+        file next to the pointer. Commits, version allocation and feed
+        exclusions hold it for a few file ops; ``add_check_constraint``,
+        ``declare_generated``, ``declare_identity`` and ``sync_identity``
+        deliberately hold it across their validation job, so no commit
+        lands between the probe and the persist — and everything else
+        waits on the same lock meanwhile."""
         return _flock(
             os.path.join(self.root, f"{name}._COMMITLOCK"),
             f"commit lock for table {name!r}",
             self._LOCK_TIMEOUT_SECONDS,
+        )
+
+    # --- table state document (``{name}._TABLE.json``) ---------------------
+
+    def _table_state(self, name: str) -> dict:
+        """The table's state document (see the class docstring for its
+        keys); empty when nothing was ever declared or recorded."""
+        try:
+            with open(os.path.join(self.root, f"{name}._TABLE.json")) as f:
+                return json.load(f)
+        except (OSError, json.JSONDecodeError):
+            return {}
+
+    @contextmanager
+    def _edit_table_state(self, name: str):
+        """Read-modify-write the state document: yields it as a dict
+        and persists it (tmp + replace) when the block exits normally.
+        The caller holds ``_commit_lock(name)`` — flock is not
+        re-entrant across fds, so the helper never takes it itself."""
+        state = self._table_state(name)
+        yield state
+        self._write_json_sidecar(
+            os.path.join(self.root, f"{name}._TABLE.json"), state
         )
 
     def _commit_pointer(
@@ -1326,17 +1346,10 @@ class TableStore:
 
     # --- CHECK constraints (Delta ADD CONSTRAINT analog) ------------------
 
-    def _constraints_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._CONSTRAINTS")
-
     def constraints(self, name: str) -> dict:
         """Declared CHECK constraints: name -> SQL boolean expression.
         Empty dict when none were declared."""
-        try:
-            with open(self._constraints_path(name)) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return {}
+        return self._table_state(name).get("constraints", {})
 
     def add_check_constraint(self, name: str, cname: str, expr: str) -> None:
         """Declare a CHECK constraint — the Delta ``ALTER TABLE ...
@@ -1353,15 +1366,14 @@ class TableStore:
         violates only when the expression evaluates to FALSE (unknown
         passes, as in standard CHECK); constrain NULLs explicitly
         with ``IS NOT NULL``. Tables without constraints pay zero —
-        the enforcement hook is one sidecar existence probe."""
+        the enforcement hook is one state-document read."""
         if not self.exists(name):
             raise FileNotFoundError(f"table {name} does not exist")
         # under the table's commit flock: (a) two concurrent adds must
         # not lose each other's entry to a read-modify-write race, and
         # (b) no data commit may land between the validation probe and
-        # the sidecar persist (commits take the same lock), so a
-        # persisted constraint really holds for the version it
-        # validated
+        # the persist (commits take the same lock), so a persisted
+        # constraint really holds for the version it validated
         with self._commit_lock(name):
             bad = self.read(name).filter(~F.expr(expr)).limit(1).collect()
             if bad:
@@ -1370,23 +1382,21 @@ class TableStore:
                     f"{name!r}: existing data violates it, e.g. "
                     f"{bad[0].asDict()}"
                 )
-            cons = self.constraints(name)
-            cons[cname] = expr
-            self._write_json_sidecar(self._constraints_path(name), cons)
+            with self._edit_table_state(name) as st:
+                st.setdefault("constraints", {})[cname] = expr
 
     def drop_check_constraint(self, name: str, cname: str) -> None:
         """Remove a declared constraint (``DROP CONSTRAINT`` analog);
         unknown names raise. Flock-serialized like ``add`` so
         concurrent mutations never lose each other's entries."""
-        with self._commit_lock(name):
-            cons = self.constraints(name)
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            cons = st.get("constraints", {})
             if cname not in cons:
                 raise ValueError(
                     f"table {name!r} has no constraint {cname!r} "
                     f"(declared: {sorted(cons)})"
                 )
             del cons[cname]
-            self._write_json_sidecar(self._constraints_path(name), cons)
 
     def _enforce_constraints(self, name: str, df: DataFrame) -> None:
         """Validate data about to become part of a new version with
@@ -1472,61 +1482,45 @@ class TableStore:
 
     # --- table properties (TBLPROPERTIES analog) --------------------------
 
-    def _properties_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._PROPERTIES")
-
     def properties(self, name: str) -> dict:
         """Free-form table properties — the ``TBLPROPERTIES`` /
         ``delta.*`` table-config analog: string key-values an operator
         layer keys policy off (owner, SLA tier, compaction cadence,
         retention intent). Purely metadata; nothing in the engine
         interprets them."""
-        try:
-            with open(self._properties_path(name)) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return {}
+        return self._table_state(name).get("properties", {})
 
     def set_properties(self, name: str, **props: str) -> None:
         """``ALTER TABLE ... SET TBLPROPERTIES`` analog — upserts the
         given keys (values stringified). Flock-serialized like every
-        sidecar mutation so concurrent setters never lose entries."""
-        with self._commit_lock(name):
-            cur = self.properties(name)
-            cur.update({k: str(v) for k, v in props.items()})
-            self._write_json_sidecar(self._properties_path(name), cur)
+        table-state change so concurrent setters never lose entries."""
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            st.setdefault("properties", {}).update(
+                {k: str(v) for k, v in props.items()}
+            )
 
     def unset_properties(self, name: str, *keys: str) -> None:
         """``ALTER TABLE ... UNSET TBLPROPERTIES`` analog; unknown
         keys are ignored (IF EXISTS semantics)."""
-        with self._commit_lock(name):
-            cur = self.properties(name)
+        with self._commit_lock(name), self._edit_table_state(name) as st:
             for k in keys:
-                cur.pop(k, None)
-            self._write_json_sidecar(self._properties_path(name), cur)
+                st.get("properties", {}).pop(k, None)
 
     # --- generated columns (Delta GENERATED ALWAYS AS analog) -------------
 
     def _write_json_sidecar(self, path: str, obj) -> None:
         """Atomic JSON sidecar write (tmp + os.replace) — the one
-        persistence primitive behind the table-level sidecars and the
+        persistence primitive behind the table state document and the
         per-version metadata files."""
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(obj, f)
         os.replace(tmp, path)
 
-    def _generated_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._GENERATED")
-
     def generated_columns(self, name: str) -> dict:
         """Declared generated columns: column -> deterministic SQL
         expression over the row's OTHER columns. Empty when none."""
-        try:
-            with open(self._generated_path(name)) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return {}
+        return self._table_state(name).get("generated", {})
 
     def declare_generated(self, name: str, col: str, expr: str) -> None:
         """Declare ``col`` as ``GENERATED ALWAYS AS (expr)`` — the
@@ -1571,26 +1565,20 @@ class TableStore:
                         f"on {name!r}: existing data contradicts it, "
                         f"e.g. {bad[0].asDict()}"
                     )
-            self._persist_generated(name, col, expr)
-
-    def _persist_generated(self, name: str, col: str, expr: str) -> None:
-        # caller holds the commit flock
-        gens = self.generated_columns(name)
-        gens[col] = expr
-        self._write_json_sidecar(self._generated_path(name), gens)
+            with self._edit_table_state(name) as st:
+                st.setdefault("generated", {})[col] = expr
 
     def drop_generated(self, name: str, col: str) -> None:
         """Remove the generation rule (the column itself stays — it
         becomes an ordinary column); unknown names raise."""
-        with self._commit_lock(name):
-            gens = self.generated_columns(name)
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            gens = st.get("generated", {})
             if col not in gens:
                 raise ValueError(
                     f"table {name!r} has no generated column {col!r} "
                     f"(declared: {sorted(gens)})"
                 )
             del gens[col]
-            self._write_json_sidecar(self._generated_path(name), gens)
 
     def _apply_generated(self, name: str, df: DataFrame) -> DataFrame:
         """Compute declared generated columns the frame is MISSING
@@ -1604,17 +1592,10 @@ class TableStore:
 
     # --- identity columns (Delta GENERATED BY DEFAULT AS IDENTITY) --------
 
-    def _identity_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._IDENTITY")
-
     def identity_columns(self, name: str) -> dict:
         """Declared identity columns: col -> {"start", "step", "hwm"}
         (``hwm`` = next unallocated value). Empty when none."""
-        try:
-            with open(self._identity_path(name)) as f:
-                return json.load(f)
-        except (OSError, json.JSONDecodeError):
-            return {}
+        return self._table_state(name).get("identity", {})
 
     def declare_identity(
         self, name: str, col: str, start: int = 1, step: int = 1
@@ -1656,13 +1637,12 @@ class TableStore:
                 ).collect()[0][0]
                 if mx is not None:
                     hwm = max(hwm, int(mx) + int(step))
-            ids = self.identity_columns(name)
-            ids[col] = {
-                "start": int(start),
-                "step": int(step),
-                "hwm": hwm,
-            }
-            self._write_json_sidecar(self._identity_path(name), ids)
+            with self._edit_table_state(name) as st:
+                st.setdefault("identity", {})[col] = {
+                    "start": int(start),
+                    "step": int(step),
+                    "hwm": hwm,
+                }
 
     def sync_identity(self, name: str, col: str) -> int:
         """``ALTER TABLE ... SYNC IDENTITY`` analog: advance the
@@ -1672,8 +1652,8 @@ class TableStore:
         pass them through, and — exactly as in Delta — the table does
         not scan supplied values on every ingest; without a sync a
         later allocation can collide with a supplied id)."""
-        with self._commit_lock(name):
-            ids = self.identity_columns(name)
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            ids = st.get("identity", {})
             if col not in ids:
                 raise ValueError(
                     f"table {name!r} has no identity column {col!r} "
@@ -1687,19 +1667,16 @@ class TableStore:
                 ids[col]["hwm"] = max(
                     int(ids[col]["hwm"]), int(mx) + step
                 )
-                self._write_json_sidecar(self._identity_path(name), ids)
             return int(ids[col]["hwm"])
 
     def _reserve_identity(self, name: str, col: str, n: int) -> int:
         """Advance the high-water mark by ``n`` steps under the commit
         flock; returns the reserved base. Concurrent writers get
         disjoint ranges."""
-        with self._commit_lock(name):
-            ids = self.identity_columns(name)
-            spec = ids[col]
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            spec = st["identity"][col]
             base = int(spec["hwm"])
             spec["hwm"] = base + int(spec["step"]) * int(n)
-            self._write_json_sidecar(self._identity_path(name), ids)
             return base
 
     def _assign_identity(
@@ -2077,22 +2054,31 @@ class TableStore:
         to THIS table start recording change rows; other tables pay
         nothing. The store-wide ``changelog`` ctor flag enables it for
         every table instead."""
+        self._check_changelog_retention()
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            st["changelog"] = True
+
+    def _check_changelog_retention(self) -> None:
         if self.keep_versions < 2:
+            # the merge-diff reads the pre-merge version after the
+            # pointer flip; retention must keep it alive
             raise ValueError("changelog requires keep_versions >= 2")
         if self.keep_versions > self._LEDGER_KEEP:
-            # same invariant the changelog=True ctor enforces: staged
-            # dirs must die (retention) before their ledger entry does
+            # a retained version dir must never outlive its _COMMITS
+            # ledger entry: the publish pass treats a staged,
+            # non-current, non-ledgered dir as pre-flip scratch, so a
+            # crashed publish older than the ledger trim would turn
+            # into silently dropped change rows — the exact failure
+            # the staged-CDF protocol exists to prevent (round-13
+            # verdict "What's wrong" #2)
             raise ValueError(
                 f"changelog requires keep_versions <= {self._LEDGER_KEEP} "
                 f"(the _COMMITS ledger trim); got {self.keep_versions}"
             )
-        marker = os.path.join(self.root, f"{name}._CDF")
-        with open(marker, "w") as f:
-            f.write("1")
 
     def _changelog_enabled(self, name: str) -> bool:
-        return self.changelog or os.path.exists(
-            os.path.join(self.root, f"{name}._CDF")
+        return self.changelog or bool(
+            self._table_state(name).get("changelog")
         )
 
     def _changelog_dir(self, name: str) -> str:
@@ -2120,7 +2106,7 @@ class TableStore:
     # table reads (underscore-prefixed, no '=').
     #
     # Committed-ness of a non-current version dir is decided by the
-    # per-table ``_COMMITS`` ledger: every flip, under the commit
+    # per-table ``commits`` ledger: every flip, under the commit
     # lock, first ensures the OUTGOING current dir is ledgered (it was
     # current, hence committed — this heals a crash between a
     # predecessor's flip and its own ledger append), then flips, then
@@ -2142,15 +2128,8 @@ class TableStore:
     _STAGED_MANIFEST = "_CDF_STAGED.json"
     _LEDGER_KEEP = 200
 
-    def _ledger_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._COMMITS")
-
     def _committed_versions(self, name: str) -> set[str]:
-        try:
-            with open(self._ledger_path(name)) as f:
-                return {ln.strip() for ln in f if ln.strip()}
-        except OSError:
-            return set()
+        return set(self._table_state(name).get("commits", []))
 
     def _ledger_record(self, name: str, version_dir: str) -> None:
         """Append a committed version dir to the ledger (call under
@@ -2161,24 +2140,15 @@ class TableStore:
         changelog commits stage records (a later ``enable_changelog``
         starts ledgering from its first post-enable flip, which is
         also the first flip that can leave anything staged)."""
-        if not self._changelog_enabled(name):
+        if not self._changelog_enabled(name) or (
+            version_dir in self._committed_versions(name)
+        ):
             return
-        p = self._ledger_path(name)
-        lines: list[str] = []
-        try:
-            with open(p) as f:
-                lines = [ln.strip() for ln in f if ln.strip()]
-        except OSError:
-            pass
-        if version_dir in lines:
-            return
-        lines.append(version_dir)
-        if len(lines) > 2 * self._LEDGER_KEEP:
-            lines = lines[-self._LEDGER_KEEP:]
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            f.write("\n".join(lines) + "\n")
-        os.replace(tmp, p)
+        with self._edit_table_state(name) as st:
+            ledger = st.setdefault("commits", [])
+            ledger.append(version_dir)
+            if len(ledger) > 2 * self._LEDGER_KEEP:
+                st["commits"] = ledger[-self._LEDGER_KEEP:]
 
     def _stage_changelog(
         self, version_full: str, out: DataFrame, ver: int, columns
@@ -2205,7 +2175,7 @@ class TableStore:
         the number of version dirs published. Pointer first, ledger
         second (see the protocol note above).
 
-        Candidate dirs come from the pointer + the ``_COMMITS``
+        Candidate dirs come from the pointer + the ``commits``
         ledger, NOT a store-root listing: a staged manifest only ever
         needs publishing from a COMMITTED dir, and every committed dir
         is current or ledgered (the flip ledgers the outgoing current
@@ -2340,28 +2310,14 @@ class TableStore:
         )
 
     def _next_commit_version(self, name: str) -> int:
-        """Allocate the next changelog commit version — under its own
-        flock (same protocol as ``_commit_lock``, separate persistent
-        lock file since changelog appends happen OUTSIDE the pointer
-        lock): an unguarded read-inc-write would let two concurrent
-        writers — now that partition-disjoint writers both land — both
-        read n and stamp their change rows with the same version,
-        silently merging two commits in every consumer's eyes."""
-        vf = os.path.join(self.root, f"{name}._VERSION")
-        with _flock(
-            os.path.join(self.root, f"{name}._VERSIONLOCK"),
-            f"version lock for table {name!r}",
-            self._LOCK_TIMEOUT_SECONDS,
-        ):
-            n = 0
-            if os.path.exists(vf):
-                with open(vf) as f:
-                    n = int(f.read().strip() or 0)
-            n += 1
-            tmp = vf + ".tmp"
-            with open(tmp, "w") as f:
-                f.write(str(n))
-            os.replace(tmp, vf)
+        """Allocate the next changelog commit version under the commit
+        lock (callers stage change rows before their commit takes it):
+        an unguarded read-inc-write would let two concurrent writers —
+        now that partition-disjoint writers both land — both read n
+        and stamp their change rows with the same version, silently
+        merging two commits in every consumer's eyes."""
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            st["version"] = n = int(st.get("version", 0)) + 1
             return n
 
     def _check_append_schema(self, name: str, cols, ver: int) -> bool:
@@ -2400,9 +2356,6 @@ class TableStore:
         self._add_feed_exclusion(name, ver)
         return False
 
-    def _exclusions_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._FEED_EXCLUDE")
-
     def feed_exclusions(self, name: str) -> list[int]:
         """Commit versions tombstoned out of the change feed (records
         written with a pre-rename logical schema after the break —
@@ -2410,28 +2363,19 @@ class TableStore:
         Exclusions only ever arise PAST a schema break, where feed
         reads use the explicit current schema, so the bad files'
         extra columns never leak into the feed schema either."""
-        try:
-            with open(self._exclusions_path(name)) as f:
-                return sorted(int(v) for v in json.load(f))
-        except (OSError, json.JSONDecodeError, ValueError):
-            return []
+        return self._table_state(name).get("feed_exclusions", [])
 
     def _add_feed_exclusion(self, name: str, ver: int) -> None:
-        # flock-guarded read-modify-write: the callers (the changelog
-        # pre-check and the post-publish re-check) run OUTSIDE the
-        # commit lock, so two writers tombstoning concurrently could
-        # each read the old set and the second os.replace would drop
-        # the first writer's exclusion — leaking one bad-schema commit
-        # back into the feed as silent NULLs (round-13 ADVICE #3; the
-        # same hazard _next_commit_version already flocks against).
-        with _flock(
-            os.path.join(self.root, f"{name}._EXCLLOCK"),
-            f"_EXCLLOCK lock for table {name!r}",
-            self._LOCK_TIMEOUT_SECONDS,
-        ):
-            vs = set(self.feed_exclusions(name))
-            vs.add(int(ver))
-            self._write_json_sidecar(self._exclusions_path(name), sorted(vs))
+        # a read-modify-write under the commit lock: the callers (the
+        # changelog pre-check and the post-publish re-check) run
+        # outside any commit, so two writers tombstoning concurrently
+        # could otherwise each read the old set and the second write
+        # would drop the first writer's exclusion — leaking one
+        # bad-schema commit back into the feed as silent NULLs
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            st["feed_exclusions"] = sorted(
+                set(st.get("feed_exclusions", [])) | {int(ver)}
+            )
 
     def _append_changelog(
         self,
@@ -2763,7 +2707,7 @@ class TableStore:
         the deleted files' offsets; the file source never re-lists
         them); NEW consumers must start at >= ``keep_from_version`` —
         that contract is ENFORCED: a successful (non-dry-run, non-no-op)
-        vacuum persists the retention cursor next to the changelog, and
+        vacuum persists the retention cursor in the table state, and
         ``read_changes``/``stream_changes`` raise on a
         ``starting_version`` below it rather than silently returning a
         partial history (an IVM bootstrap reading a truncated feed
@@ -2815,9 +2759,7 @@ class TableStore:
                 # inverse failure — crash after the cursor write,
                 # before any delete — merely over-claims truncation on
                 # files that still exist: one-sided, safe.
-                self._set_changelog_cursor(
-                    name, max(cutoff, self.changelog_cursor(name))
-                )
+                self._raise_changelog_cursor(name, cutoff)
             for p in doomed:
                 # count only files actually unlinked: a stale listing
                 # (concurrent vacuum) must not report bytes it never
@@ -2844,24 +2786,20 @@ class TableStore:
             "min_retained_version": self.changelog_cursor(name),
         }
 
-    def _cursor_path(self, name: str) -> str:
-        return os.path.join(self._changelog_dir(name), "_MIN_RETAINED")
-
     def changelog_cursor(self, name: str) -> int:
         """Version floor left by ``vacuum_changelog`` — the smallest
         ``starting_version`` a NEW consumer may read from. 0 when the
         feed was never vacuumed (full history present)."""
-        try:
-            with open(self._cursor_path(name)) as f:
-                return int(f.read().strip() or 0)
-        except (OSError, ValueError):
-            return 0
+        return int(self._table_state(name).get("min_retained", 0))
 
-    def _set_changelog_cursor(self, name: str, version: int) -> None:
-        tmp = self._cursor_path(name) + ".tmp"
-        with open(tmp, "w") as f:
-            f.write(str(int(version)))
-        os.replace(tmp, self._cursor_path(name))
+    def _raise_changelog_cursor(self, name: str, version: int) -> None:
+        # the max is taken inside the locked update: two concurrent
+        # vacuums that both read the old cursor must never leave the
+        # smaller cutoff behind, below files the larger one unlinked
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            st["min_retained"] = max(
+                int(st.get("min_retained", 0)), int(version)
+            )
 
     def _check_changelog_cursor(self, name: str, starting_version: int) -> None:
         cursor = self.changelog_cursor(name)
@@ -3819,15 +3757,8 @@ class TableStore:
 
     # --- partition-pruned merge path -------------------------------------
 
-    def _spec_path(self, name: str) -> str:
-        return os.path.join(self.root, f"{name}._SPEC")
-
     def partition_spec(self, name: str) -> dict | None:
-        p = self._spec_path(name)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
+        return self._table_state(name).get("spec")
 
     def _partition_expr(self, spec: dict, keys: Sequence[str]) -> Column:
         if spec["mode"] == "hash":
@@ -3865,7 +3796,8 @@ class TableStore:
                 "n_buckets": int(n_buckets),
                 "keys": list(keys or []),
             }
-        self._write_json_sidecar(self._spec_path(name), spec)
+        with self._commit_lock(name), self._edit_table_state(name) as st:
+            st["spec"] = spec
 
     def write_partitioned(
         self,
@@ -4659,28 +4591,25 @@ class TableStore:
                 shutil.rmtree(full, ignore_errors=True)
                 if attempt:
                     raise
-        spec = self.partition_spec(src)
-        if spec is not None:
-            self._write_json_sidecar(self._spec_path(dst), spec)
-        if self._changelog_enabled(src) and not self.changelog:
-            self.enable_changelog(dst)
-        # a fork keeps its invariants: CHECK constraints and generated
-        # columns inherit like the partition spec and changelog setting
-        cons = self.constraints(src)
-        if cons:
-            self._write_json_sidecar(self._constraints_path(dst), cons)
-        gens = self.generated_columns(src)
-        if gens:
-            self._write_json_sidecar(self._generated_path(dst), gens)
-        props = self.properties(src)
-        if props:
-            self._write_json_sidecar(self._properties_path(dst), props)
-        idents = self.identity_columns(src)
-        if idents:
-            # the clone resumes from the source's high-water mark —
-            # the two tables then allocate independently (Delta clone
-            # identity semantics)
-            self._write_json_sidecar(self._identity_path(dst), idents)
+        # a fork keeps its declarations — partition spec, CHECK
+        # constraints, generated and identity columns (resuming from
+        # the source's high-water mark, then allocating independently:
+        # Delta clone identity semantics), properties and the
+        # changelog setting — but not the source's feed bookkeeping
+        src_state = self._table_state(src)
+        inherited = {
+            k: src_state[k]
+            for k in (
+                "spec", "constraints", "generated", "identity",
+                "properties", "changelog",
+            )
+            if k in src_state
+        }
+        if inherited.get("changelog"):
+            self._check_changelog_retention()
+        if inherited:
+            with self._commit_lock(dst), self._edit_table_state(dst) as st:
+                st.update(inherited)
         self._write_op(
             full,
             "clone",
@@ -4716,11 +4645,11 @@ class TableStore:
         reference ``ignoreDeletes`` consumers drop them,
         ``Silver/05-silver.py:71-76``).
 
-        Caveat: the partition spec (``_SPEC``) is table-level, not
-        versioned — restoring across a re-partitioning
-        (``write_partitioned`` with a different bucket count) leaves
-        data and spec inconsistent. Re-create rather than restore
-        across a layout change."""
+        Caveat: the partition spec (``spec`` in ``_TABLE.json``) is
+        table-level, not versioned — restoring across a
+        re-partitioning (``write_partitioned`` with a different bucket
+        count) leaves data and spec inconsistent. Re-create rather
+        than restore across a layout change."""
         if (version is None) == (timestamp_as_of is None):
             raise ValueError(
                 "pass exactly one of version / timestamp_as_of"
@@ -5525,38 +5454,3 @@ class TableStore:
             schema=self._to_physical(df_all, cm_cur)[0],
             neutral=True,
         )
-
-
-def delta_merge_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def delta_merge(
-    spark: SparkSession,
-    table_name: str,
-    source: DataFrame,
-    condition: str,
-    matched_update: dict[str, str] | None = None,
-    matched_condition: str | None = None,
-    insert_all: bool = True,
-) -> None:
-    """Production path on OSS delta-spark (``DeltaTable.merge``) —
-    byte-for-byte the reference's MERGE shapes without full-table
-    rewrite. Not exercisable in this container (no delta jars); kept
-    behind the import gate."""
-    if not delta_merge_available():
-        raise NotImplementedError("delta-spark is not on the classpath")
-    from delta.tables import DeltaTable
-
-    t = DeltaTable.forName(spark, table_name).alias("a")
-    m = t.merge(source.alias("b"), condition)
-    if matched_update:
-        m = m.whenMatchedUpdate(condition=matched_condition, set=matched_update)
-    if insert_all:
-        m = m.whenNotMatchedInsertAll()
-    m.execute()

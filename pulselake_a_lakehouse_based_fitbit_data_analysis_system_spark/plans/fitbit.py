@@ -16,9 +16,8 @@ Streaming + the engine's operator library:
   upsert (reference ``Gold/06-gold.py``); gym_summary as a lazy view
   with the BETWEEN reporting join (``Setup/02-setup.py:244-256``).
 
-Storage is the parquet-backed TableStore (delta-spark absent in this
-container — under Delta the same policies map onto DeltaTable.merge;
-see operators.merge.delta_merge). TableStore's changelog mode provides
+Storage is the parquet-backed TableStore (under Delta the same
+policies map onto DeltaTable.merge). TableStore's changelog mode provides
 the Delta-CDF analog the reference's silver-on-silver streams rely on
 (S4/T8/T9, ``Silver/05-silver.py:71-76``): ``stream_changes`` is an
 incremental streaming source over per-commit change records with

@@ -43,6 +43,18 @@ def default_parallelism() -> int:
     return os.cpu_count() or 8
 
 
+def default_driver_memory() -> str:
+    """Driver heap: $SPARK_DRIVER_MEMORY, else half of physical memory
+    capped at 16g. A local-mode driver grows its heap toward the cap
+    before collecting it, so a 16g heap on a 16 GB machine gets the JVM
+    killed for lack of memory once the Python side holds a few GB."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16384, phys_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "pulselake-spark",
     cpus: int | None = None,
@@ -68,7 +80,7 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         # Parquet TIMESTAMP(NANOS) (written by pandas/arrow) is not a
         # Spark type; read as long and convert at the source boundary
         # (sources.tables handles the micros conversion).

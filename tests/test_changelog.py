@@ -491,6 +491,99 @@ def test_feed_exclusion_concurrent_adds_all_survive(spark, tmp_path):
     assert store.feed_exclusions("t") == vers
 
 
+def test_changelog_cursor_concurrent_raises_keep_the_max(spark, tmp_path):
+    """Lost-update pin for the vacuum cursor: the max is taken inside
+    the locked update, so concurrent raises in any order leave the
+    largest — a smaller one landing last must never move the cursor
+    back below files a larger vacuum already unlinked."""
+    import random
+    import sys
+    import threading
+
+    store = _store(spark, tmp_path)
+    vers = list(range(1, 41))
+    random.Random(0).shuffle(vers)
+    threads = [
+        threading.Thread(
+            target=store._raise_changelog_cursor, args=("t", v)
+        )
+        for v in vers
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert store.changelog_cursor("t") == max(vers)
+
+
+def test_table_state_is_one_document_and_clone_inherits_declarations(
+    spark, tmp_path
+):
+    """A hash-partitioned changelog table through every table-level
+    change — partitioning, CHECK, generated, identity, properties, two
+    merges, a rename (schema break), a feed exclusion and a changelog
+    vacuum — keeps its state in ONE root document: the store root
+    holds only the pointer, the commit lock, ``_TABLE.json``, version
+    dirs and the feed dir. A clone inherits every declaration and the
+    changelog flag, but starts its feed bookkeeping empty."""
+    import os
+
+    store = TableStore(spark, str(tmp_path), keep_versions=3)
+    store.declare_partitioning("t", keys=["k"], n_buckets=2)
+    store.declare_generated("t", "g", "v * 2")
+    store.declare_identity("t", "id")
+    store.enable_changelog("t")
+    store.merge(
+        "t",
+        spark.createDataFrame([Row(k=i, v=i, note="a") for i in range(6)]),
+        ["k"],
+        policy="scd1",
+    )
+    store.add_check_constraint("t", "v_nonneg", "v >= 0")
+    store.set_properties("t", owner="ops")
+    store.merge(
+        "t",
+        spark.createDataFrame([Row(k=1, v=10, note="b"), Row(k=9, v=9, note="c")]),
+        ["k"],
+        policy="scd1",
+    )
+    store.rename_column("t", "note", "memo")
+    assert store.schema_break_version("t") > 0
+    store._add_feed_exclusion("t", 99)
+    store.vacuum_changelog("t", keep_from_version=2)
+    assert store.changelog_cursor("t") == 2
+
+    assert {
+        f for f in os.listdir(tmp_path) if not f.startswith("t.v")
+    } == {"t._CURRENT", "t._COMMITLOCK", "t._TABLE.json", "t.changelog"}
+    assert all(
+        os.path.isdir(tmp_path / f)
+        for f in os.listdir(tmp_path)
+        if f.startswith("t.v")
+    )
+    assert "_MIN_RETAINED" not in os.listdir(tmp_path / "t.changelog")
+
+    store.clone("t", "c")
+    for accessor in (
+        "partition_spec", "constraints", "generated_columns",
+        "identity_columns", "properties",
+    ):
+        got = getattr(store, accessor)("c")
+        assert got and got == getattr(store, accessor)("t"), accessor
+    assert store._changelog_enabled("c")
+    assert store.feed_exclusions("c") == []
+    assert store.changelog_cursor("c") == 0
+    assert store._committed_versions("c") == {
+        os.path.basename(store.current_path("c"))
+    }
+
+
 def test_schema_break_concurrent_sets_are_monotone(spark, tmp_path):
     """Lost-update pin (r14, the ADVICE-#3 hazard one sidecar over):
     the break travels inside each version and the pointer flip carries

@@ -1,12 +1,12 @@
 """Environmental-gate probes (round-3 verdict, "Next round" #8).
 
-Three capabilities are import/classpath-gated because this container
-lacks their dependencies: delta-spark (real Delta MERGE + CDF),
-google.protobuf (Spark 4 transformWithStateInPandas state server), and
-the spark-sql-kafka jar (Kafka source ``.load()``). Each probe below
-skips with an explicit reason today and FLIPS ON AUTOMATICALLY the
-moment the container gains the dependency — no code change needed for
-the gated path to get its first real execution.
+Two capabilities are import/classpath-gated because their
+dependencies may be absent: google.protobuf (Spark 4
+transformWithStateInPandas state server) and the spark-sql-kafka jar
+(Kafka source ``.load()``). Each probe below skips with an explicit
+reason while its dependency is missing and FLIPS ON AUTOMATICALLY the
+moment it appears — no code change needed for the gated path to get
+its first real execution.
 
 Cost when skipped: one import / one classloader lookup per probe.
 """
@@ -14,19 +14,8 @@ Cost when skipped: one import / one classloader lookup per probe.
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
-from pyspark.sql import Row
-
-
-def _delta_available() -> bool:
-    try:
-        import delta  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
 
 
 def _protobuf_available() -> bool:
@@ -46,44 +35,6 @@ def _kafka_jar_available(spark) -> bool:
         return True
     except Exception:
         return False
-
-
-@pytest.mark.skipif(
-    not _delta_available(),
-    reason="delta-spark absent from container — TableStore carries the "
-    "MERGE/CDF semantics meanwhile (operators/merge.py); this probe "
-    "runs a real DeltaTable.merge the moment `import delta` works",
-)
-def test_probe_delta_merge_round_trip(spark, tmp_path):
-    """First real execution of operators.merge.delta_merge: create a
-    Delta table, upsert via the gated MERGE path, check SCD-1 result."""
-    from delta.tables import DeltaTable
-
-    from pulselake_a_lakehouse_based_fitbit_data_analysis_system_spark.operators.merge import (
-        delta_merge,
-    )
-
-    path = str(tmp_path / f"delta_{uuid.uuid4().hex[:8]}")
-    spark.createDataFrame(
-        [Row(k=1, v="old"), Row(k=2, v="keep")]
-    ).write.format("delta").save(path)
-    name = f"probe_delta_{uuid.uuid4().hex[:8]}"
-    spark.sql(f"CREATE TABLE {name} USING delta LOCATION '{path}'")
-    try:
-        src = spark.createDataFrame([Row(k=1, v="new"), Row(k=3, v="ins")])
-        delta_merge(
-            spark,
-            name,
-            src,
-            "a.k = b.k",
-            matched_update={"v": "b.v"},
-        )
-        got = {
-            r["k"]: r["v"] for r in DeltaTable.forName(spark, name).toDF().collect()
-        }
-        assert got == {1: "new", 2: "keep", 3: "ins"}
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
 @pytest.mark.skipif(
