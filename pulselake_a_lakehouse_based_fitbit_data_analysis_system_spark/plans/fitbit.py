@@ -26,7 +26,28 @@ incremental-batch recompute (pattern tested in
 ``tests/test_changelog.py``).
 
 Orchestration mirrors the reference's dependency waves with barriers
-(``Silver/05-silver.py:486-503``) via streaming.orchestrator.
+(``Silver/05-silver.py:486-503``) via streaming.orchestrator, with one
+wave fewer: the reference's wave 2 stream-stream join reads silver
+``workouts``, this port's reads the bronze multiplex, so
+``completed_workouts`` starts with the five wave-1 streams instead of
+waiting behind them. The waves are bronze → silver1 (users, gym_logs,
+user_profile, workouts, heart_rate, completed_workouts) → user_bins →
+silver3 (workout_bpm, which reads completed_workouts and users) → gold.
+
+Every bronze and silver query starts with no-data micro-batches off
+(``spark.sql.streaming.noDataMicroBatches.enabled=false``, scoped to the
+query's ``start()``). Structured Streaming runs a no-data batch after a
+data batch moves the watermark, only to evict state and emit output
+that eviction releases. The pipeline's stateful operators are
+watermarked ``dropDuplicates`` and inner stream-stream joins, which emit
+a row when it arrives and nothing on eviction, so those batches would
+produce no rows, yet each would pay a state commit and an empty merge
+that commits a whole table version. Eviction happens in the next data
+batch instead, which applies the advanced watermark to both its
+late-row filter and its eviction, so the rows are the same. An append-mode aggregation, an
+outer join or a state timeout emits on eviction; a query with one of
+those would need its no-data batches back. The change-feed queries of
+``incremental_dims`` hold no state and never run no-data batches.
 """
 
 from __future__ import annotations
@@ -49,7 +70,11 @@ from ..schemas import (
     WORKOUT_PAYLOAD,
 )
 from ..sources.files import read_csv_stream, read_json_stream
+from ..streaming.ops import session_conf
 from ..streaming.orchestrator import StreamWave, run_waves
+
+# conf every bronze and silver query starts with (module docstring)
+_QUERY_CONF = {"spark.sql.streaming.noDataMicroBatches.enabled": "false"}
 
 
 class FitbitPipeline:
@@ -110,10 +135,13 @@ class FitbitPipeline:
         self.processing_time = processing_time
         os.makedirs(self.landing, exist_ok=True)
 
-    def _trigger(self, writer):
+    def _start(self, writer):
         if self.available_now:
-            return writer.trigger(availableNow=True)
-        return writer.trigger(processingTime=self.processing_time)
+            writer = writer.trigger(availableNow=True)
+        else:
+            writer = writer.trigger(processingTime=self.processing_time)
+        with session_conf(self.spark, _QUERY_CONF):
+            return writer.start()
 
     # -- dimensions --------------------------------------------------------
 
@@ -144,10 +172,9 @@ class FitbitPipeline:
             .option("checkpointLocation", os.path.join(self.ckpt, f"bz_{name}"))
             .queryName(f"bz_{name}")
         )
-        writer = self._trigger(writer)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
-        return writer.start()
+        return self._start(writer)
 
     def bronze_starters(self):
         """Three incremental bronze streams (reference
@@ -220,7 +247,7 @@ class FitbitPipeline:
             .option("checkpointLocation", os.path.join(self.ckpt, f"sv_{name}"))
             .queryName(f"sv_{name}")
         )
-        return self._trigger(writer).start()
+        return self._start(writer)
 
     def silver_wave1_starters(self):
         store = self.store
@@ -351,13 +378,12 @@ class FitbitPipeline:
 
         return [users, gym_logs, user_profile, workouts, heart_rate]
 
-    # -- silver wave 2 ------------------------------------------------------
-
     def completed_workouts_starter(self):
         """Stream-stream interval join straight off the bronze multiplex
         (reference J3, ``Silver/05-silver.py:368-400``): starts × stops,
         equi on (user_id, workout_id, session_id), stop within 3 h —
-        the bounded condition is what lets Spark evict join state.
+        the bounded condition is what lets Spark evict join state. It
+        reads no silver table, so it runs in wave silver1.
 
         All DataFrame construction happens inside the returned thunk:
         the bronze multiplex table doesn't exist until the bronze wave
@@ -704,19 +730,34 @@ class FitbitPipeline:
     # -- orchestration ------------------------------------------------------
 
     def run(self, timeout_sec: int = 600) -> dict[str, list[str]]:
-        """One full incremental drain: bronze wave → silver wave 1 →
-        wave 2 (dim + stream-stream join) → wave 3 → gold. Mirrors the
-        reference driver (``Test Scripts/07-run.py``)."""
+        """One full incremental drain: bronze wave → silver wave 1 (the
+        five entity streams and the completed_workouts interval join,
+        which reads only the bronze multiplex) → user_bins → silver
+        wave 3 (workout_bpm, which reads completed_workouts) → gold.
+        Mirrors the reference driver (``Test Scripts/07-run.py``); the
+        reference's wave 2 is folded into wave 1 (module docstring).
+        Bronze and silver queries skip no-data micro-batches, so each
+        stream runs only the batches that carry rows.
+
+        Drain mode only: live (``available_now=False``) queries never
+        terminate, so a wave barrier could only time out. Live mode is
+        driven through the starters (``bronze_starters``,
+        ``silver_wave1_starters``), which start the same queries."""
+        if not self.available_now:
+            raise ValueError(
+                "FitbitPipeline.run() drains with availableNow triggers; "
+                "a live (available_now=False) pipeline never terminates. "
+                "Start its queries through bronze_starters() and "
+                "silver_wave1_starters() and stop them when done."
+            )
         if not self.store.exists("date_lookup"):
             self.load_date_lookup()
+        silver1 = self.silver_wave1_starters() + [self.completed_workouts_starter()]
         report = run_waves(
             self.spark,
             [
                 StreamWave("bronze", self.bronze_starters(), pool="bronze"),
-                StreamWave("silver1", self.silver_wave1_starters(), pool="silver"),
-                StreamWave(
-                    "silver2", [self.completed_workouts_starter()], pool="silver"
-                ),
+                StreamWave("silver1", silver1, pool="silver"),
             ],
             timeout_sec=timeout_sec,
         )

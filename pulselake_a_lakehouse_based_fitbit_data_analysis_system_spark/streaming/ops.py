@@ -23,7 +23,8 @@ import os
 import shutil
 import tempfile
 import uuid
-from collections.abc import Sequence
+from collections.abc import Iterator, Mapping, Sequence
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -404,6 +405,27 @@ def _staged_input_rows(result_stream: DataFrame) -> int | None:
     return total if found else None
 
 
+@contextmanager
+def session_conf(spark: SparkSession, conf: Mapping[str, str]) -> Iterator[None]:
+    """Set ``conf`` on the session for the block, then put back what
+    was there before: the old value, or no value if the key was unset.
+
+    A streaming query clones the session conf at ``start()``, so a
+    query started inside the block keeps ``conf`` for its whole run,
+    and queries started outside it never see it."""
+    saved = {k: spark.conf.get(k, None) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 def run_stream_to_memory(
     result_stream: DataFrame,
     output_mode: str = "append",
@@ -478,11 +500,10 @@ def run_stream_to_memory(
             )
     if stats_out is not None:
         stats_out["state_partitions"] = state_partitions
-    conf_key = "spark.sql.shuffle.partitions"
-    saved = spark.conf.get(conf_key) if state_partitions is not None else None
+    conf = {}
     if state_partitions is not None:
-        spark.conf.set(conf_key, str(state_partitions))
-    try:
+        conf["spark.sql.shuffle.partitions"] = str(state_partitions)
+    with session_conf(spark, conf):
         q = (
             result_stream.writeStream.format("memory")
             .queryName(name)
@@ -490,9 +511,6 @@ def run_stream_to_memory(
             .trigger(availableNow=True)
             .start()
         )
-    finally:
-        if saved is not None:
-            spark.conf.set(conf_key, saved)
     try:
         q.awaitTermination(timeout_sec)
         if stats_out is not None:

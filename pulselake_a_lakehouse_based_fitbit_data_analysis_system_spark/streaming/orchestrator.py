@@ -12,6 +12,8 @@ starts the next.
 
 from __future__ import annotations
 
+import contextlib
+import time
 from collections.abc import Callable, Sequence
 from dataclasses import dataclass, field
 
@@ -35,22 +37,41 @@ def run_waves(
 ) -> dict[str, list[str]]:
     """Run waves with barriers. Returns {wave: [query names]}. Queries
     must use availableNow (drain) triggers — the runner awaits their
-    termination before releasing the next wave."""
+    termination before releasing the next wave.
+
+    Each wave has one deadline, ``timeout_sec`` after it starts, that
+    all of its queries share: a wave of six queries waits at most
+    ``timeout_sec``, not six times that. When a query of the wave fails
+    or the deadline passes, every query of the wave still active is
+    stopped before the error is raised, so a failed wave leaves nothing
+    running; the wave's scheduler pool is reset either way."""
     report: dict[str, list[str]] = {}
     for wave in waves:
         if wave.pool:
             spark.sparkContext.setLocalProperty("spark.scheduler.pool", wave.pool)
-        queries = [start() for start in wave.starters]
-        for q in queries:
-            if not q.awaitTermination(timeout_sec):
-                q.stop()
-                raise TimeoutError(
-                    f"stream {q.name or q.id} in wave {wave.name!r} did not "
-                    f"drain within {timeout_sec}s"
-                )
-            if q.exception() is not None:
-                raise q.exception()
+        queries: list[StreamingQuery] = []
+        try:
+            deadline = time.monotonic() + timeout_sec
+            for start in wave.starters:
+                queries.append(start())
+            for q in queries:
+                # awaitTermination takes a positive timeout only
+                left = max(deadline - time.monotonic(), 0.001)
+                if not q.awaitTermination(left):
+                    raise TimeoutError(
+                        f"stream {q.name or q.id} in wave {wave.name!r} did not "
+                        f"drain within {timeout_sec}s"
+                    )
+                if q.exception() is not None:
+                    raise q.exception()
+        except BaseException:
+            for q in queries:
+                if q.isActive:
+                    with contextlib.suppress(Exception):
+                        q.stop()
+            raise
+        finally:
+            if wave.pool:
+                spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
         report[wave.name] = [q.name or str(q.id) for q in queries]
-        if wave.pool:
-            spark.sparkContext.setLocalProperty("spark.scheduler.pool", None)
     return report

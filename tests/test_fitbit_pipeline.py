@@ -7,6 +7,9 @@ only new files) and idempotency (merges don't duplicate on replay).
 
 from __future__ import annotations
 
+import datetime
+import time
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -89,6 +92,77 @@ def test_two_set_replay(spark, workdir):
             and (s if dim == "age" else a) is None
         ]
         assert sum(r.n_sessions for r in dim_rows) == grand.n_sessions
+
+
+def test_replay_runs_only_micro_batches_with_rows(spark, tmp_path):
+    """Pipeline queries start with no-data micro-batches off, scoped to
+    their start(): over a two-set replay no bronze or silver batch runs
+    without input rows, the session setting is unchanged, and a
+    watermarked dedup started afterwards outside the pipeline still runs
+    its no-data batch."""
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Batches(StreamingQueryListener):
+        def __init__(self):
+            self.ended, self.batches = set(), []
+
+        def onQueryStarted(self, event):
+            pass
+
+        def onQueryProgress(self, event):
+            self.batches.append((event.progress.name, event.progress.numInputRows))
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            self.ended.add(event.runId)
+
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    before = spark.conf.get(key, None)
+    listener = Batches()
+    spark.streams.addListener(listener)
+    try:
+        pipe = FitbitPipeline(spark, str(tmp_path))
+        sets = []
+        for i in (1, 2):
+            sets.append(fx.generate_set(i, n_users=2))
+            fx.write_landing(sets[-1], pipe.landing)
+            runs = pipe.run()
+        assert pipe.table_counts() == fx.expected_counts(sets)
+        # events arrive on the listener bus after run() returns; a
+        # query's progress events come before its termination event
+        n_queries = 2 * sum(len(names) for names in runs.values())
+        deadline = time.time() + 60
+        while len(listener.ended) < n_queries and time.time() < deadline:
+            time.sleep(0.2)
+        assert len(listener.ended) == n_queries
+    finally:
+        spark.streams.removeListener(listener)
+    pipeline = [b for b in listener.batches if b[0].startswith(("bz_", "sv_"))]
+    assert {name for name, _ in pipeline} == {
+        name for names in runs.values() for name in names
+    }
+    assert [b for b in pipeline if b[1] == 0] == []
+    assert spark.conf.get(key, None) == before
+
+    src = str(tmp_path / "dedup_src")
+    t0 = datetime.datetime(2023, 1, 1)
+    spark.createDataFrame(
+        [(k, t0 + datetime.timedelta(minutes=k)) for k in range(3)],
+        "k long, ts timestamp",
+    ).write.parquet(src)
+    q = (
+        spark.readStream.schema("k long, ts timestamp").parquet(src)
+        .withWatermark("ts", "0 seconds")
+        .dropDuplicates(["k"])
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ck_dedup"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    assert [p["numInputRows"] for p in q.recentProgress] == [3, 0]
 
 
 def test_optimize_after_replay_restores_disjoint_ranges_and_pruning(

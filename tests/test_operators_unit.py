@@ -1325,6 +1325,37 @@ def test_run_stream_auto_sizes_state_partitions(spark):
     )
 
 
+def test_run_stream_to_memory_restores_shuffle_partitions_when_start_fails(
+    spark, tmp_path
+):
+    """The sized shuffle setting is scoped to the drain's start(): the
+    session value comes back when start() raises, and session_conf
+    leaves a key it found unset unset again."""
+    from pulselake_a_lakehouse_based_fitbit_data_analysis_system_spark.streaming import (
+        ops as stream_ops,
+    )
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    key = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(key)
+    stream = spark.readStream.schema("id long").parquet(src)
+    # complete output mode needs an aggregation, so start() raises
+    with pytest.raises(Exception, match="(?i)complete"):
+        stream_ops.run_stream_to_memory(
+            stream, output_mode="complete", state_partitions=3
+        )
+    assert spark.conf.get(key) == saved
+
+    unset_key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    assert spark.conf.get(unset_key, None) is None
+    with stream_ops.session_conf(spark, {unset_key: "false", key: "5"}):
+        assert spark.conf.get(unset_key) == "false"
+        assert spark.conf.get(key) == "5"
+    assert spark.conf.get(unset_key, None) is None
+    assert spark.conf.get(key) == saved
+
+
 def test_stream_stream_join_sizes_to_four_stores_per_partition(spark):
     """A symmetric stream-stream join instantiates FOUR state stores
     per shuffle partition (left/right x keyToNumValues/

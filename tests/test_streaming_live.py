@@ -5,7 +5,7 @@ thread lands fixture set 2 mid-flight; the pipeline must converge to
 the golden counts and shut down cleanly.
 
 This exercises the non-drain branch of the dual-mode trigger
-(``FitbitPipeline._trigger`` / reference ``Bronze/04-bronze.py:39-42``)
+(``FitbitPipeline._start`` / reference ``Bronze/04-bronze.py:39-42``)
 that every other test leaves cold.
 """
 
@@ -14,6 +14,7 @@ from __future__ import annotations
 import threading
 import time
 
+import pytest
 from pyspark.sql import functions as F
 
 from pulselake_a_lakehouse_based_fitbit_data_analysis_system_spark.plans import (
@@ -346,3 +347,63 @@ def test_stream_changes_delivers_crash_recovered_publish(spark, tmp_path):
         }, got
     finally:
         q.stop()
+
+
+def test_live_run_fails_fast(spark, tmp_path):
+    """run() drains; on a live pipeline it raises before it starts a
+    query or writes a table, instead of timing out with streams left
+    running."""
+    live = FitbitPipeline(spark, str(tmp_path), available_now=False)
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(ValueError, match="starters"):
+        live.run()
+    assert {q.id for q in spark.streams.active} == active
+    assert not live.store.exists("date_lookup")
+
+
+def test_run_waves_stops_the_wave_and_resets_the_pool(spark, tmp_path):
+    """A failed or timed-out wave leaves none of its queries running
+    and its scheduler pool unset."""
+    from pulselake_a_lakehouse_based_fitbit_data_analysis_system_spark.streaming.orchestrator import (
+        StreamWave,
+        run_waves,
+    )
+
+    src = str(tmp_path / "src")
+    spark.range(3).write.parquet(src)
+    started = []
+
+    def live():
+        q = (
+            spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+            .writeStream.format("noop")
+            .option("checkpointLocation", str(tmp_path / f"ck_live{len(started)}"))
+            .trigger(processingTime="1 second")
+            .start()
+        )
+        started.append(q)
+        return q
+
+    def failing():
+        def boom(_batch, _id):
+            raise RuntimeError("batch failed")
+
+        q = (
+            spark.readStream.schema("id long").parquet(src)
+            .writeStream.foreachBatch(boom)
+            .option("checkpointLocation", str(tmp_path / "ck_failing"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        started.append(q)
+        return q
+
+    sc = spark.sparkContext
+    with pytest.raises(Exception, match="batch failed"):
+        run_waves(spark, [StreamWave("w", [failing, live], pool="p")])
+    with pytest.raises(TimeoutError, match="did not drain within 2s"):
+        run_waves(spark, [StreamWave("w", [live], pool="p")], timeout_sec=2)
+    assert len(started) == 3
+    active = {q.id for q in spark.streams.active}
+    assert not active & {q.id for q in started}
+    assert sc.getLocalProperty("spark.scheduler.pool") is None
