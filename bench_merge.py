@@ -8,9 +8,9 @@ parquet actually REWRITTEN (new inodes) vs hard-linked, for two
 configurations of the same store:
 
 - ``partition``: the round-2 behavior, file stats disabled by merging
-  on a freshly written store whose sidecar is removed — the whole
-  affected bucket rewrites.
-- ``file``: the round-3 behavior — the min/max sidecar prunes the
+  on a freshly written store whose file stats are removed from its
+  commit record — the whole affected bucket rewrites.
+- ``file``: the round-3 behavior — the min/max file stats prune the
   rewrite to the files whose key range can contain the merge key.
 
 Prints ONE JSON line:
@@ -76,7 +76,9 @@ def _measure(spark, base_df, *, file_pruning: bool) -> tuple[float, float]:
             spark.conf.set("spark.sql.adaptive.enabled", aqe)
         cur = store.current_path("t")
         if not file_pruning:
-            os.remove(os.path.join(cur, "_FILESTATS.json"))
+            rec = store._commit_record(cur)
+            del rec["meta"]["file_stats"]
+            store._write_json_sidecar(os.path.join(cur, store._OPFILE), rec)
         before = _inode_map(cur)
         batch = spark.createDataFrame(
             [Row(event_id=7, user_id=1, value=0.0)]

@@ -671,31 +671,36 @@ class TableStore:
 
     **File-level min/max skipping** (the Delta data-skipping analog):
     partitioned writes range-cluster rows on (partition, merge key) so
-    files within a partition hold disjoint key ranges, and a
-    ``_FILESTATS.json`` sidecar records each file's [min, max] merge-
-    key bounds from the parquet footer. A merge then rewrites only the
-    files whose range can contain a source key and hard-links the rest
-    of the partition — a hot single key rewrites ONE file, not a ~3 TB
-    bucket. Non-integer keys and escape-encoded partition values fall
-    back to whole-partition rewrites (conservative, never incorrect).
+    files within a partition hold disjoint key ranges, and the
+    version's commit record (``file_stats``) holds each file's [min,
+    max] merge-key bounds from the parquet footer. A merge then
+    rewrites only the files whose range can contain a source key and
+    hard-links the rest of the partition — a hot single key rewrites
+    ONE file, not a ~3 TB bucket. Non-integer keys and escape-encoded
+    partition values fall back to whole-partition rewrites
+    (conservative, never incorrect).
 
-    **Commit anatomy.** Every partition-scoped commit (pruned merge,
+    **Commit anatomy.** Every version dir holds ONE metadata document,
+    its commit record ``_OP.json`` (the Delta-log commit analog): the
+    commit info at top level (``op``, ``ts``, ``n_files`` / ``bytes``
+    and the operation's details, what ``history()`` shows) and the
+    version's state under ``meta`` — ``schema``, ``colmap`` (column
+    mapping), ``dv`` (deletion vector), ``file_stats`` (merge-key
+    bounds per file), ``rewritten`` / ``based_on`` / ``neutral``
+    (partitions touched, for partition-level conflict detection) and
+    ``break`` (the change feed's schema break). ``_commit_record`` is
+    its one loader. Every partition-scoped commit (pruned merge,
     delete / update / replace_where, optimize, delete_vectored) and
     the rebase of one are finished by ``_commit_version``: it moves
     the rewritten partitions in from scratch, hard-links the rest of
-    the parent, then writes the per-version files — ``_FILESTATS.json``
-    (merge-key bounds per file), ``_BLOOM.*`` / ``_MINMAX.*``
-    (skipping sidecars), ``_DV.json`` (deletion vector),
-    ``_SCHEMA.json``, ``_COLMAP.json`` (column mapping), ``_OP.json``
-    (commit info with ``n_files`` / ``bytes``), any staged change
-    records (``_CDF_STAGED``) and ``_REWRITTEN.json`` (partitions
-    touched, for partition-level conflict detection) — before the
-    ``_CURRENT`` pointer flips. ``restore`` and the column-mapping
-    DDL build their versions from the same ``_link_parent`` and
-    ``_write_version_files`` steps, and ``write`` writes its file
-    stats before its flip. ``_BREAK.json`` holds the change feed's
-    schema break: a rename/drop/widen writes it into its version, and
-    the flip carries the current version's into every incoming one.
+    the parent, then writes the ``_BLOOM.*`` / ``_MINMAX.*`` skipping
+    sidecars, the commit record and any staged change records
+    (``_CDF_STAGED``) before the ``_CURRENT`` pointer flips.
+    ``restore`` and the column-mapping DDL build their versions from
+    the same ``_link_parent`` and ``_write_version_files`` steps;
+    ``write`` and ``clone`` write their records before their flips.
+    A rename/drop/widen records the break it allocated, and the flip
+    carries the current version's break into every incoming record.
     The rule: everything a commit changes in the table's versioned
     state is in the version dir before the flip. Only
     ``_publish_staged`` (moving staged change records into the feed),
@@ -828,16 +833,20 @@ class TableStore:
         was current, hence committed — heals a predecessor's crash
         between ITS flip and ITS ledger append), the new dir after
         (see the staged-CDF protocol note). The current version's
-        schema break carries into the incoming one when larger (a
-        fresh tmp+replace file, never a write through a shared link),
+        schema break carries into the incoming commit record when
+        larger (rewritten tmp+replace, never through a shared link),
         so the break never decreases."""
         if cur_base is not None:
             self._ledger_record(name, cur_base)
-            brk = self._load_break(os.path.join(self.root, cur_base))
+            brk = self._version_meta(os.path.join(self.root, cur_base)).get(
+                "break", 0
+            )
             incoming = os.path.join(self.root, version_dir)
-            if brk and brk > self._load_break(incoming):
+            rec = self._commit_record(incoming)
+            if brk > rec.get("meta", {}).get("break", 0):
+                rec.setdefault("meta", {})["break"] = brk
                 self._write_json_sidecar(
-                    os.path.join(incoming, self._BREAKFILE), brk
+                    os.path.join(incoming, self._OPFILE), rec
                 )
         tmp_ptr = self._pointer(name) + ".tmp"
         with open(tmp_ptr, "w") as f:
@@ -848,40 +857,37 @@ class TableStore:
     # --- partition-level conflict detection (the Delta logical-
     # conflict analog: disjoint writers both commit) -----------------------
 
-    _REWRITTENFILE = "_REWRITTEN.json"
-
-    def _write_rewritten(
-        self, version_full: str, rewritten, based_on: str | None,
-        neutral: bool = False,
-    ) -> None:
-        """Record WHICH partition dirs this version rewrote (vs
-        hard-linked) and which version it derived from — the metadata
-        partition-level conflict detection walks. Ops that rewrite
-        unbounded/unknown sets (create, OVERWRITE, clone) simply don't
-        write it (a RESTORE links its source's: same content, same
-        provenance); a missing sidecar reads as 'touched everything',
-        the conservative answer. ``neutral=True`` marks a
-        commit that rewrote files but NOT logical content (OPTIMIZE /
-        ZORDER compaction): the chain walk still proves the hop but
-        contributes nothing to the conflict set, so compaction never
-        logically conflicts with disjoint-or-overlapping writers —
-        exactly Delta's compaction-vs-writer semantics (a writer
-        rebasing over a neutral hop takes its own partitions back,
-        reverting only the LAYOUT of those partitions, never values)."""
+    @staticmethod
+    def _provenance(
+        rewritten, based_on: str | None, neutral: bool = False
+    ) -> dict:
+        """The commit record keys saying WHICH partition dirs a version
+        rewrote (vs hard-linked) and which version it derived from —
+        the metadata partition-level conflict detection walks. Ops
+        that rewrite unbounded/unknown sets (create, OVERWRITE, clone)
+        simply don't record it (a RESTORE keeps its source's: same
+        content, same provenance); a record without it reads as
+        'touched everything', the conservative answer. ``neutral=True``
+        marks a commit that rewrote files but NOT logical content
+        (OPTIMIZE / ZORDER compaction): the chain walk still proves
+        the hop but contributes nothing to the conflict set, so
+        compaction never logically conflicts with disjoint-or-
+        overlapping writers — exactly Delta's compaction-vs-writer
+        semantics (a writer rebasing over a neutral hop takes its own
+        partitions back, reverting only the LAYOUT of those
+        partitions, never values)."""
         rec = {"rewritten": sorted(rewritten), "based_on": based_on}
         if neutral:
             rec["neutral"] = True
-        self._write_json_sidecar(
-            os.path.join(version_full, self._REWRITTENFILE), rec
-        )
+        return rec
 
     def _chain_rewritten(
         self, from_version: str, to_version: str
     ) -> set[str] | None:
         """Union of partition dirs rewritten by every commit that
         moved the pointer from ``from_version`` to ``to_version`` —
-        or None when the chain can't be proven (a hop's sidecar is
-        missing or names no parent, a hop's version dir was pruned,
+        or None when the chain can't be proven (a hop's record names
+        no rewritten set or no parent, a hop's version dir was pruned,
         or the walk doesn't reach ``from_version``): unknown means
         'assume everything changed'."""
         union: set[str] = set()
@@ -889,12 +895,7 @@ class TableStore:
         for _ in range(256):  # bound the walk; real chains are short
             if cur == from_version:
                 return union
-            p = os.path.join(self.root, cur, self._REWRITTENFILE)
-            try:
-                with open(p) as f:
-                    rec = json.load(f)
-            except (OSError, json.JSONDecodeError):
-                return None
+            rec = self._version_meta(os.path.join(self.root, cur))
             rewritten = rec.get("rewritten")
             based = rec.get("based_on")
             if rewritten is None or based is None:
@@ -920,9 +921,10 @@ class TableStore:
         concurrent writers table-level CAS alone would serialize the
         world through retries). If every intervening commit rewrote
         only partitions DISJOINT from ours — proven by walking their
-        ``_REWRITTEN`` sidecars — the version REBASES: a new version
-        dir takes the current version's partitions (hard links) plus
-        ours for the partitions we rewrote, sidecars re-derived
+        commit records' provenance — the version REBASES: a new
+        version dir takes the current version's partitions (hard
+        links) plus ours for the partitions we rewrote, metadata
+        re-derived
         (schema must be identical — a concurrent schema evolution is
         a real conflict), and the pointer flips to the rebase. Any
         doubt (unknown op in the chain, pruned hop, schema drift,
@@ -936,6 +938,9 @@ class TableStore:
                 self._flip_pointer(name, cur_base, version_dir)
                 return version_dir
             ours_full = os.path.join(self.root, version_dir)
+            ours_rec = self._commit_record(ours_full)
+            ours_meta = ours_rec.get("meta", {})
+            cur_meta = self._version_meta(cur) if cur else {}
             inter = (
                 self._chain_rewritten(based_on, cur_base)
                 if cur_base is not None
@@ -955,42 +960,36 @@ class TableStore:
                 # on disjoint partitions (the rebase would mix
                 # schemas) — but compare FIELD NAME/TYPE SETS, not raw
                 # text: a partitionBy write orders the partition
-                # column last while a linked create-era sidecar keeps
+                # column last while a carried create-era schema keeps
                 # the original order, and merge plans routinely widen
                 # nullability (align_for_evolution / tomb folds cast
                 # F.lit(None)); parquet reads by name and the rebase
-                # applies ours' sidecar to unchanged values, so
+                # applies ours' schema to unchanged values, so
                 # neither reordering nor nullability drift is a
                 # conflict — only a name/type change is (a
-                # metadata-only commit like delete_vectored links the
-                # older sidecar verbatim and used to false-conflict
+                # metadata-only commit like delete_vectored carries
+                # the older schema verbatim and used to false-conflict
                 # against any later merge)
-                def _fieldset(p: str):
-                    with open(p) as f:
-                        s = json.load(f)
+                def _fieldset(meta: dict):
                     return sorted(
                         (
                             fld.get("name"),
                             json.dumps(fld.get("type"), sort_keys=True),
                         )
-                        for fld in s.get("fields", [])
+                        for fld in meta["schema"].get("fields", [])
                     )
 
-                try:
-                    ok = _fieldset(
-                        os.path.join(cur, self._SCHEMAFILE)
-                    ) == _fieldset(os.path.join(ours_full, self._SCHEMAFILE))
-                except (OSError, json.JSONDecodeError):
-                    ok = False
-                # a concurrent rename/drop (column mapping change) is
-                # a real conflict even on disjoint partitions — the
-                # rebase would mix two logical views of the same
-                # physical files; the loser retries and re-reads the
-                # new mapping
-                if ok and self._load_colmap(cur) != self._load_colmap(
-                    ours_full
-                ):
-                    ok = False
+                ok = (
+                    "schema" in cur_meta
+                    and "schema" in ours_meta
+                    and _fieldset(cur_meta) == _fieldset(ours_meta)
+                    # a concurrent rename/drop (column mapping change)
+                    # is a real conflict even on disjoint partitions —
+                    # the rebase would mix two logical views of the
+                    # same physical files; the loser retries and
+                    # re-reads the new mapping
+                    and cur_meta.get("colmap") == ours_meta.get("colmap")
+                )
             if not ok:
                 shutil.rmtree(ours_full, ignore_errors=True)
                 raise ConcurrentWriteError(
@@ -1031,16 +1030,8 @@ class TableStore:
             # detail keys (e.g. delete_vectored's n_rows) carry
             # through: history() must not lose them just because the
             # commit landed via rebase instead of plain CAS
-            try:
-                with open(os.path.join(ours_full, self._OPFILE)) as f:
-                    ours_rec = json.load(f)
-            except Exception:
-                ours_rec = {}
-            extras = {
-                k: v
-                for k, v in ours_rec.items()
-                if k not in ("op", "ts", "n_files", "bytes", "rebased_onto")
-            }
+            skip = ("op", "ts", "n_files", "bytes", "rebased_onto", "meta")
+            extras = {k: v for k, v in ours_rec.items() if k not in skip}
             # deletion vectors carry EXACTLY — dropping an entry would
             # resurrect deleted rows. cur's entries carry inode-
             # validated for the hard-linked partitions; ours' entries
@@ -1052,38 +1043,28 @@ class TableStore:
             # valid one (ours' copies are redundant or stale).
             moved_dv = {
                 rel: rows
-                for rel, rows in self._load_dv(ours_full).items()
+                for rel, rows in ours_meta.get("dv", {}).items()
                 if rel.split("/", 1)[0] in rewritten
             }
-            stats_key = (self._load_file_stats(ours_full) or {}).get(
-                "key"
-            ) or (self._load_file_stats(cur) or {}).get("key")
             # the schema is ours' (proven field-equal to cur's above);
-            # the column mapping is cur's (proven equal to ours')
+            # the column mapping is cur's (proven equal to ours'). A
+            # rebased commit keeps its content-neutrality: the
+            # compacted partitions' content equals cur's for them (the
+            # intervening commits were proven disjoint), so a rebased
+            # OPTIMIZE is still layout-only relative to cur
             self._write_version_files(
                 rebase_full,
                 cur,
                 str(ours_rec.get("op", "merge")),
-                stats_key=stats_key,
-                schema=ours_full,
+                stats_key=ours_meta.get("file_stats", {}).get("key"),
+                schema=ours_meta["schema"],
                 dv_add=moved_dv,
                 also_from=ours_full,
+                provenance=self._provenance(
+                    rewritten, cur_base, bool(ours_meta.get("neutral"))
+                ),
                 rebased_onto=cur_base,
                 **extras,
-            )
-            # a rebased commit keeps its content-neutrality: the
-            # compacted partitions' content equals cur's for them (the
-            # intervening commits were proven disjoint), so a rebased
-            # OPTIMIZE is still layout-only relative to cur
-            try:
-                with open(
-                    os.path.join(ours_full, self._REWRITTENFILE)
-                ) as f:
-                    ours_neutral = bool(json.load(f).get("neutral"))
-            except (OSError, json.JSONDecodeError):
-                ours_neutral = False
-            self._write_rewritten(
-                rebase_full, rewritten, cur_base, neutral=ours_neutral
             )
             shutil.rmtree(ours_full, ignore_errors=True)
             self._flip_pointer(name, cur_base, rebase_dir)
@@ -1113,13 +1094,7 @@ class TableStore:
         ``_write_version_files``) instead of linking the parent's."""
         return fname in (
             self._OPFILE,
-            self._DVFILE,
-            self._REWRITTENFILE,
             self._STAGED_MANIFEST,
-            self._FILESTATS,
-            self._SCHEMAFILE,
-            self._COLMAPFILE,
-            self._BREAKFILE,
         ) or fname.startswith((self._BLOOM_PREFIX, self._MINMAX_PREFIX))
 
     def _link_parent(
@@ -1173,39 +1148,68 @@ class TableStore:
         parent: str,
         op: str,
         *,
-        stats_key: str | None,
-        schema: DataFrame | dict | str,
+        stats_key: str | None = None,
+        schema: DataFrame | dict | None = None,
         colmap: dict | None = None,
         dv_add: dict | None = None,
         also_from: str | None = None,
+        provenance: dict | None = None,
+        schema_break: int = 0,
         **details,
     ) -> None:
-        """The per-version metadata of a version assembled from
-        ``parent``: merge-key file stats and the bloom/min-max
-        sidecars carry the entries of files still linked (plus, for a
-        rebase, ``also_from``'s), the deletion vector carries exactly
-        and unions ``dv_add``, the schema is ``schema``'s (a frame, a
-        schema JSON doc, or a version dir whose sidecar is copied),
-        the column mapping is
-        ``colmap`` or the parent's, and the commit info goes last so
-        its ``n_files``/``bytes`` describe the finished dir."""
+        """The metadata of a version assembled from ``parent``: the
+        bloom/min-max sidecars and the commit record, whose merge-key
+        file stats (keyed on ``stats_key``, else the parent's key)
+        carry the entries of files still linked (plus, for a rebase,
+        ``also_from``'s), whose deletion vector carries exactly and
+        unions ``dv_add``, whose schema is ``schema``'s (a frame or a
+        schema JSON doc; None keeps the parent's) and whose column
+        mapping is ``colmap`` or the parent's. ``provenance``
+        (``_provenance``) and ``schema_break`` are recorded as given.
+        The record is written last so its ``n_files``/``bytes``
+        describe the finished dir."""
+        parent_meta = self._version_meta(parent)
         carriers = [parent] if also_from is None else [parent, also_from]
+        meta: dict = {}
+        stats_key = stats_key or parent_meta.get("file_stats", {}).get("key")
         if stats_key is not None:
-            self._write_file_stats(full, stats_key, *carriers)
+            meta["file_stats"] = self._file_stats(
+                full,
+                stats_key,
+                parent_meta,
+                *(self._version_meta(src) for src in carriers[1:]),
+            )
         for src in carriers:
             self._carry_bloom_sidecars(src, full)
-        self._carry_dv(parent, full, add=dv_add)
-        if not isinstance(schema, str):
-            self._write_schema(full, schema)
-        elif os.path.exists(os.path.join(schema, self._SCHEMAFILE)):
-            shutil.copyfile(
-                os.path.join(schema, self._SCHEMAFILE),
-                os.path.join(full, self._SCHEMAFILE),
-            )
-        self._write_colmap(
-            full, self._load_colmap(parent) if colmap is None else colmap
-        )
-        self._write_op(full, op, **details)
+        # deletion vectors carry EXACTLY — CORRECTNESS-critical, unlike
+        # the advisory bloom/minmax carry: a hard-linked file whose DV
+        # entry is dropped would resurrect its deleted rows. Rewritten
+        # files materialized the filter through a DV-wrapped read, so
+        # their entries correctly die with them
+        dv = self._linked_entries(parent, full, parent_meta.get("dv", {}))
+        for rel, rows in (dv_add or {}).items():
+            dv[rel] = [*dv.get(rel, ()), *rows]
+        dv = {
+            rel: sorted({int(r) for r in rows})
+            for rel, rows in dv.items()
+            if rows
+        }
+        if dv:
+            meta["dv"] = dv
+        if isinstance(schema, DataFrame):
+            schema = schema.schema.jsonValue()
+        if schema is None:
+            schema = parent_meta.get("schema")
+        if schema is not None:
+            meta["schema"] = schema
+        if colmap is None:
+            colmap = parent_meta.get("colmap")
+        if colmap is not None:
+            meta["colmap"] = colmap
+        meta.update(provenance or {})
+        if schema_break:
+            meta["break"] = schema_break
+        self._write_op(full, op, meta, **details)
 
     def _commit_version(
         self,
@@ -1216,8 +1220,8 @@ class TableStore:
         scratch: str | None,
         replaced: dict[str, set[str] | None],
         touched: set[str] | None,
-        stats_key: str | None,
-        schema: DataFrame | str,
+        stats_key: str | None = None,
+        schema: DataFrame | None = None,
         colmap: dict | None = None,
         dv_add: dict | None = None,
         stage: Callable[[str], None] | None = None,
@@ -1228,13 +1232,13 @@ class TableStore:
         ``current``: move ``scratch``'s partitions into a new version
         dir and link the rest of ``current`` (``_link_parent``; a
         commit without scratch output links everything), write the
-        per-version files, run ``stage`` (the caller's changelog
+        version's metadata, run ``stage`` (the caller's changelog
         staging) before the flip, then commit. ``touched`` is the set
         of partitions whose content changed beyond the scratch ones
-        (emptied partitions); the commit records them with the
-        scratch partitions in ``_REWRITTEN`` and goes through
-        ``_commit_pointer_or_rebase``. ``None`` means the touched set
-        cannot be proven: no sidecar, plain table-level
+        (emptied partitions); the commit record lists them with the
+        scratch partitions as ``rewritten`` and the commit goes
+        through ``_commit_pointer_or_rebase``. ``None`` means the
+        touched set cannot be proven: no provenance, plain table-level
         compare-and-set. ``neutral`` marks a layout-only commit
         (OPTIMIZE)."""
         version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
@@ -1250,6 +1254,9 @@ class TableStore:
             {**dict.fromkeys(moved), **replaced},
             root_files=scratch is None,
         )
+        based_on = os.path.basename(current)
+        if touched is not None:
+            touched = touched | moved
         self._write_version_files(
             full,
             current,
@@ -1258,17 +1265,19 @@ class TableStore:
             schema=schema,
             colmap=colmap,
             dv_add=dv_add,
+            provenance=(
+                None
+                if touched is None
+                else self._provenance(touched, based_on, neutral)
+            ),
             **details,
         )
         if stage is not None:
             stage(full)
-        based_on = os.path.basename(current)
         if touched is None:
             self._commit_pointer(name, version_dir, based_on=based_on)
             final = version_dir
         else:
-            touched = touched | moved
-            self._write_rewritten(full, touched, based_on, neutral=neutral)
             final = self._commit_pointer_or_rebase(
                 name, version_dir, based_on, touched
             )
@@ -1319,10 +1328,10 @@ class TableStore:
             writer.parquet(full)
         finally:
             self._release_pins(idpins)
-        self._write_schema(full, df)
+        meta = {"schema": df.schema.jsonValue()}
         if _stats_key is not None:
-            self._write_file_stats(full, _stats_key)
-        self._write_op(full, _op)
+            meta["file_stats"] = self._file_stats(full, _stats_key)
+        self._write_op(full, _op, meta)
         # change rows STAGE into the version dir before the flip so
         # the commit publishes state and changes atomically (the
         # crash-atomic CDF protocol — see the staged-records note)
@@ -1510,8 +1519,9 @@ class TableStore:
 
     def _write_json_sidecar(self, path: str, obj) -> None:
         """Atomic JSON sidecar write (tmp + os.replace) — the one
-        persistence primitive behind the table state document and the
-        per-version metadata files."""
+        persistence primitive behind the table state document, each
+        version's commit record, the carried skipping sidecars and the
+        staged-records manifest."""
         tmp = path + ".tmp"
         with open(tmp, "w") as f:
             json.dump(obj, f)
@@ -1812,30 +1822,10 @@ class TableStore:
             unpin(p)
 
     # --- deletion vectors (Delta merge-on-read DELETE analog) -------------
-
-    _DVFILE = "_DV.json"
-
-    def _load_dv(self, version_full: str) -> dict:
-        """The version's deletion vector: rel file path -> sorted row
-        indices marked deleted. {} when none."""
-        try:
-            with open(os.path.join(version_full, self._DVFILE)) as f:
-                dv = json.load(f)
-            return {rel: rows for rel, rows in dv.items() if rows}
-        except (OSError, json.JSONDecodeError):
-            return {}
-
-    def _write_dv(self, version_full: str, dv: dict) -> None:
-        dv = {rel: sorted(set(int(r) for r in rows))
-              for rel, rows in dv.items() if rows}
-        p = os.path.join(version_full, self._DVFILE)
-        if not dv:
-            try:
-                os.unlink(p)
-            except OSError:
-                pass
-            return
-        self._write_json_sidecar(p, dv)
+    #
+    # A version's deletion vector is its commit record's ``dv``: rel
+    # file path -> sorted row indices marked deleted (absent when
+    # none).
 
     def _dv_rel_expr(self, version_full: str) -> Column:
         """Version-relative file path of each row's source file,
@@ -1848,18 +1838,19 @@ class TableStore:
             F.col("_metadata.file_path"), ".*" + re.escape(base) + "/", ""
         )
 
-    def _dv_filter(self, df: DataFrame, version_full: str) -> DataFrame:
-        """Drop rows marked deleted by the version's deletion vector —
-        the merge-on-read half of ``delete_vectored``. No-op (and no
-        plan change) without a DV. With one: the (rel path, row index)
-        pairs broadcast into a left-anti hash join against the scan's
-        ``_metadata`` columns — filters still push through the anti
-        join's left side, so partition pruning and predicate pushdown
-        survive. MUST wrap every read of raw version files (the
-        central ``_read_version`` plus the file-pruned direct readers
-        in the merge and skipping paths): an unwrapped reader would
-        resurrect deleted rows."""
-        dv = self._load_dv(version_full)
+    def _dv_filter(
+        self, df: DataFrame, version_full: str, dv: dict | None
+    ) -> DataFrame:
+        """Drop rows marked deleted by ``dv``, the deletion vector of
+        ``version_full`` — the merge-on-read half of
+        ``delete_vectored``. No-op (and no plan change) without a DV.
+        With one: the (rel path, row index) pairs broadcast into a
+        left-anti hash join against the scan's ``_metadata`` columns —
+        filters still push through the anti join's left side, so
+        partition pruning and predicate pushdown survive. Every read
+        of raw version files goes through ``_read_version``, which
+        applies it: an unwrapped reader would resurrect deleted
+        rows."""
         if not dv:
             return df
         pairs = [
@@ -1878,8 +1869,8 @@ class TableStore:
 
     @staticmethod
     def _linked_entries(src_full: str, dst_full: str, entries: dict) -> dict:
-        """The entries of a per-file sidecar (rel path -> value) whose
-        file is hard-linked from ``src_full`` into ``dst_full`` — same
+        """The per-file entries (rel path -> value) whose file is
+        hard-linked from ``src_full`` into ``dst_full`` — same
         relative path AND same inode. Rewritten files fall out."""
         kept = {}
         for rel, val in entries.items():
@@ -1891,22 +1882,6 @@ class TableStore:
             except OSError:
                 continue  # file not carried into the new version
         return kept
-
-    def _carry_dv(
-        self, src_full: str, dst_full: str, add: dict | None = None
-    ) -> None:
-        """Carry deletion-vector entries across a version rewrite —
-        CORRECTNESS-critical, unlike the advisory bloom/minmax carry:
-        a hard-linked file whose DV entry is dropped would resurrect
-        its deleted rows. Entries carry exactly for files hard-linked
-        into the new version; rewritten files materialized the filter
-        through a DV-wrapped read, so their entries correctly die with
-        them. ``add`` unions further entries in (new deletes, or the
-        partitions a rebase moved in)."""
-        dv = self._linked_entries(src_full, dst_full, self._load_dv(src_full))
-        for rel, rows in (add or {}).items():
-            dv[rel] = [*dv.get(rel, ()), *rows]
-        self._write_dv(dst_full, dv)
 
     def delete_vectored(
         self,
@@ -1921,7 +1896,7 @@ class TableStore:
         columns, existing DV already applied) append to the version's
         deletion vector; the new version HARD-LINKS every data file of
         the current one, so the commit is pure metadata — at 100 TB a
-        GDPR point-delete costs a sidecar write instead of rewriting
+        GDPR point-delete costs a commit record write instead of rewriting
         the parquet files that hold the rows. Reads apply the DV as a
         broadcast anti join; every later rewrite (merge / optimize /
         delete / update) materializes the filter for the files it
@@ -1944,14 +1919,15 @@ class TableStore:
                 f"{name} has an active changelog: pass keys=<merge keys> "
                 "so the delete can commit its row-level records"
             )
-        reader = self._schema_reader(current)
+        meta = self._version_meta(current)
         raw = self._apply_colmap(
-            reader.parquet(current)
+            self._schema_reader(meta)
+            .parquet(current)
             .withColumn("__dv_rel", self._dv_rel_expr(current))
             .withColumn("__dv_ri", F.col("_metadata.row_index")),
-            current,
+            meta.get("colmap"),
         )
-        dv = self._load_dv(current)
+        dv = meta.get("dv")
         if dv:
             doomed0 = self.spark.createDataFrame(
                 [(rel, int(ri)) for rel, rows in dv.items() for ri in rows],
@@ -2007,7 +1983,6 @@ class TableStore:
             for r in pairs
             if "/" in r["__dv_rel"]
         }
-        stats = self._load_file_stats(current)
         # a metadata-only commit: every file of the current version
         # links into the new one. On a partitioned table the logical
         # content of exactly the affected partitions changed, so the
@@ -2023,8 +1998,6 @@ class TableStore:
                 if affected and self.partition_spec(name) is not None
                 else None
             ),
-            stats_key=(stats or {}).get("key"),
-            schema=current,
             dv_add=new_dv,
             # drop the internal bucket column like every other
             # changelog writer (the stored schema carries it on
@@ -2647,7 +2620,6 @@ class TableStore:
         if current is None:
             raise FileNotFoundError(f"table {name} does not exist")
         n_files, n_bytes = self._data_footprint(current)
-        stats = self._load_file_stats(current)
         sidecars = sorted(
             fname[len(self._BLOOM_PREFIX):-len(".json")]
             for fname in os.listdir(current)
@@ -2684,7 +2656,9 @@ class TableStore:
                     os.path.join(self.root, d, self._STAGED_MANIFEST)
                 )
             ),
-            "stats_key": (stats or {}).get("key"),
+            "stats_key": self._version_meta(current)
+            .get("file_stats", {})
+            .get("key"),
             "bloom_columns": sidecars,
             "minmax_columns": minmax,
         }
@@ -2884,9 +2858,26 @@ class TableStore:
                 shutil.rmtree(os.path.join(self.root, v), ignore_errors=True)
         return {"versions": list(doomed), "bytes": n_bytes, "files": n_files}
 
-    # --- operation sidecar (DESCRIBE HISTORY support) ----------------------
+    # --- commit record (DESCRIBE HISTORY support, version metadata) --------
 
     _OPFILE = "_OP.json"
+
+    def _commit_record(self, version_full: str) -> dict:
+        """The version's commit record — the one loader of per-version
+        metadata (see the class docstring for its keys). Empty when
+        the record is missing or malformed, so every reader degrades
+        to 'no metadata' (a NULL history row, an inferred schema, no
+        deletion vector, unprovable provenance)."""
+        try:
+            with open(os.path.join(version_full, self._OPFILE)) as f:
+                rec = json.load(f)
+        except (OSError, json.JSONDecodeError):
+            return {}
+        return rec if isinstance(rec, dict) else {}
+
+    def _version_meta(self, version_full: str) -> dict:
+        """The version state part (``meta``) of the commit record."""
+        return self._commit_record(version_full).get("meta", {})
 
     def _data_footprint(self, version_full: str) -> tuple[int, int]:
         """(parquet files, bytes) of a version's table data; staged
@@ -2900,17 +2891,17 @@ class TableStore:
                     n_bytes += os.path.getsize(os.path.join(root, f))
         return n_files, n_bytes
 
-    def _write_op(self, version_full: str, op: str, **details) -> None:
-        """Record which operation created a version — the Delta-log
-        commit-info analog behind ``history()``. Written with the
-        tmp+replace pattern so a restore's hard-linked copy of the
-        source sidecar is REPLACED (new inode), never mutated through
-        the shared link. Also records the version's physical
-        ``n_files``/``bytes`` (the Delta operationMetrics analog,
-        surfaced through ``history()``'s details) — a driver-side
-        metadata walk of the just-written version dir, the same scale
-        as the file-stats sidecar every partitioned commit already
-        pays."""
+    def _write_op(
+        self, version_full: str, op: str, meta: dict, **details
+    ) -> None:
+        """Write the version's commit record: which operation created
+        it — the Delta-log commit-info analog behind ``history()`` —
+        and the version state ``meta``. Also records the version's
+        physical ``n_files``/``bytes`` (the Delta operationMetrics
+        analog, surfaced through ``history()``'s details) — a
+        driver-side metadata walk of the just-written version dir,
+        the same scale as the file stats every partitioned commit
+        already pays."""
         try:
             n_files, n_bytes = self._data_footprint(version_full)
         except OSError:
@@ -2922,6 +2913,7 @@ class TableStore:
             "n_files": n_files,
             "bytes": int(n_bytes),
             **details,
+            "meta": meta,
         }
         self._write_json_sidecar(os.path.join(version_full, self._OPFILE), rec)
 
@@ -2929,26 +2921,26 @@ class TableStore:
         """``DESCRIBE HISTORY`` analog: one row per retained version,
         oldest → newest — (version dir, sequence, operation,
         timestamp, details JSON). Purely driver-side metadata (reads
-        one tiny sidecar per version, no data scan); versions
-        predating the sidecar show a NULL operation. Bounded by
-        ``keep_versions`` like every versions() view."""
+        each version's commit record, no data scan; the version state
+        under ``meta`` is not a detail); versions without a readable
+        record show a NULL operation. Bounded by ``keep_versions``
+        like every versions() view."""
         rows = []
         for i, v in enumerate(self.versions(name)):
-            p = os.path.join(self.root, v, self._OPFILE)
-            op = ts = details = None
+            rec = self._commit_record(os.path.join(self.root, v))
             try:
-                with open(p) as f:
-                    rec = json.load(f)
                 op = str(rec["op"])
                 ts = float(rec["ts"])
                 extra = {
-                    k: val for k, val in rec.items() if k not in ("op", "ts")
+                    k: val
+                    for k, val in rec.items()
+                    if k not in ("op", "ts", "meta")
                 }
                 details = json.dumps(extra, sort_keys=True) if extra else None
             except Exception:
-                # missing or malformed sidecar (pre-sidecar version,
-                # torn write): the documented contract is a NULL
-                # operation row, never a crashed history() call
+                # missing or malformed record (torn write): the
+                # documented contract is a NULL operation row, never
+                # a crashed history() call
                 op = ts = details = None
             rows.append((v, i, op, ts, details))
         return self.spark.createDataFrame(
@@ -2957,88 +2949,65 @@ class TableStore:
             "ts_epoch double, details string",
         )
 
-    # --- schema sidecar (evolution support) -------------------------------
+    # --- stored schema (evolution support) --------------------------------
+    #
+    # A version's table schema is its commit record's ``schema`` (the
+    # Delta-log schema analog). After a schema-evolution merge a
+    # version holds MIXED parquet schemas — hard-linked pre-evolution
+    # files plus widened new ones — and a plain read would surface
+    # whichever schema the sampled footer has; reading with the stored
+    # schema fills the old files' missing columns with NULLs instead.
 
-    _SCHEMAFILE = "_SCHEMA.json"
-
-    def _write_schema(
-        self, version_full: str, schema: DataFrame | dict
-    ) -> None:
-        """Persist the version's table schema — a frame's, or a schema
-        JSON doc (the Delta-log schema analog). After a
-        schema-evolution merge a version holds MIXED parquet schemas —
-        hard-linked pre-evolution files plus widened new ones — and a
-        plain read would surface whichever schema the sampled footer
-        has; reading with the stored schema fills the old files'
-        missing columns with NULLs instead."""
-        if isinstance(schema, DataFrame):
-            schema = schema.schema.jsonValue()
-        self._write_json_sidecar(
-            os.path.join(version_full, self._SCHEMAFILE), schema
-        )
-
-    def _stored_schema(self, version_full: str):
-        p = os.path.join(version_full, self._SCHEMAFILE)
-        if not os.path.exists(p):
-            return None
+    def _schema_reader(self, meta: dict, base_path: str | None = None):
+        """Reader pinned to a version's STORED schema (``meta`` is its
+        commit record's version state) — every read of raw version
+        files (whole-dir or per-file candidates) must see the same
+        declared types: post-evolution versions mix files with and
+        without new columns, post-widening versions mix narrow and
+        wide encodings, and an inferred read would NULL-fill,
+        truncate-compare or fail to merge. ``base_path`` (the version
+        dir) adds the basePath option so partition columns resolve on
+        per-file reads."""
         from pyspark.sql import types as T
 
-        with open(p) as f:
-            return T.StructType.fromJson(json.load(f))
-
-    def _schema_reader(self, version_full: str, base_path: bool = False):
-        """Reader pinned to the version's STORED schema — every read
-        of raw version files (whole-dir or per-file candidates) must
-        see the same declared types: post-evolution versions mix
-        files with and without new columns, post-widening versions mix
-        narrow and wide encodings, and an inferred read would NULL-
-        fill, truncate-compare or fail to merge. ``base_path`` adds
-        the basePath option so partition columns resolve on per-file
-        reads."""
         reader = self.spark.read
-        if base_path:
-            reader = reader.option("basePath", version_full)
-        stored = self._stored_schema(version_full)
-        if stored is not None:
-            reader = reader.schema(stored)
+        if base_path is not None:
+            reader = reader.option("basePath", base_path)
+        if "schema" in meta:
+            reader = reader.schema(T.StructType.fromJson(meta["schema"]))
         return reader
 
-    def _read_version(self, path: str) -> DataFrame:
+    def _read_version(self, path: str, files: Sequence[str] = ()) -> DataFrame:
+        """The logical rows of version dir ``path`` — all of it, or only
+        ``files`` (read with basePath so partition columns resolve) —
+        from ONE commit-record read: the stored schema pins the scan,
+        the deletion vector drops deleted rows and the column mapping
+        lifts physical names to logical ones. Every read of a
+        version's rows goes through here."""
+        meta = self._version_meta(path)
+        df = self._schema_reader(meta, path if files else None).parquet(
+            *(files or [path])
+        )
         return self._apply_colmap(
-            self._dv_filter(self._schema_reader(path).parquet(path), path),
-            path,
+            self._dv_filter(df, path, meta.get("dv")), meta.get("colmap")
         )
 
     # --- column mapping (Delta RENAME / DROP COLUMN analog) ---------------
+    #
+    # A version's column mapping is its commit record's ``colmap`` —
+    # ``{"map": {logical: physical, ...}, "retired": [physical, ...]}``
+    # — absent for the identity mapping (tables that never renamed or
+    # dropped a column).
 
-    _COLMAPFILE = "_COLMAP.json"
-
-    def _load_colmap(self, version_full: str) -> dict | None:
-        """The version's column mapping — ``{"map": {logical:
-        physical, ...}, "retired": [physical, ...]}`` — or None for
-        the identity mapping (tables that never renamed or dropped a
-        column pay exactly one ``os.path.exists`` per read)."""
-        p = os.path.join(version_full, self._COLMAPFILE)
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            return json.load(f)
-
-    def _write_colmap(self, version_full: str, cm: dict | None) -> None:
-        if cm is not None:
-            self._write_json_sidecar(
-                os.path.join(version_full, self._COLMAPFILE), cm
-            )
-
-    def _apply_colmap(self, df: DataFrame, version_full: str) -> DataFrame:
-        """Physical file columns -> the version's logical view: mapped
-        physical columns rename to their logical names, retired
-        (dropped) physicals disappear (column pruning pushes the
-        exclusion into the scan — a dropped column's bytes are never
-        read), internal columns (``__bucket``, DV bookkeeping) pass
-        through. A narrow projection — no shuffle, stays inside
-        whole-stage codegen."""
-        cm = self._load_colmap(version_full)
+    @staticmethod
+    def _apply_colmap(df: DataFrame, cm: dict | None) -> DataFrame:
+        """Physical file columns -> the logical view of column mapping
+        ``cm``: mapped physical columns rename to their logical names,
+        retired (dropped) physicals disappear (column pruning pushes
+        the exclusion into the scan — a dropped column's bytes are
+        never read), internal columns (``__bucket``, DV bookkeeping)
+        pass through. A narrow projection — no shuffle, stays inside
+        whole-stage codegen. No-op for the identity mapping (None)."""
         if cm is None:
             return df
         ptl = {p: l for l, p in cm["map"].items()}
@@ -3084,15 +3053,19 @@ class TableStore:
                 sel.append(F.col(c).alias(phys) if phys != c else F.col(c))
         return df.select(*sel), {"map": cmap, "retired": retired}
 
-    def _logical_fields(self, version_full: str) -> dict | None:
-        """Logical column name -> Spark DataType for the version, from
-        the stored (physical) schema through the column mapping; None
-        when no schema sidecar exists."""
-        schema = self._stored_schema(version_full)
-        if schema is None:
+    @staticmethod
+    def _logical_fields(meta: dict) -> dict | None:
+        """Logical column name -> Spark DataType for a version (``meta``
+        is its commit record's version state), from the stored
+        (physical) schema through the column mapping; None when the
+        version records no schema."""
+        from pyspark.sql import types as T
+
+        if "schema" not in meta:
             return None
+        schema = T.StructType.fromJson(meta["schema"])
         fields = {f.name: f.dataType for f in schema.fields}
-        cm = self._load_colmap(version_full)
+        cm = meta.get("colmap")
         if cm is None:
             return fields
         retired = set(cm.get("retired") or [])
@@ -3107,10 +3080,15 @@ class TableStore:
                 out[nm] = dt  # internal passthrough (__bucket)
         return out
 
-    def _identity_colmap(self, current: str) -> dict:
-        schema = self._stored_schema(current)
+    def _colmap_or_identity(self, current: str) -> dict:
+        """The version's column mapping, or the identity mapping over
+        its columns when it has none."""
+        meta = self._version_meta(current)
+        if "colmap" in meta:
+            return meta["colmap"]
+        schema = meta.get("schema")
         if schema is not None:
-            cols = [f.name for f in schema.fields]
+            cols = [f["name"] for f in schema.get("fields", [])]
         else:
             cols = self._read_version(current).columns
         return {
@@ -3214,9 +3192,9 @@ class TableStore:
     ) -> None:
         """Metadata-only commit of a new column mapping: every file of
         the current version hard-links into the new version dir (zero
-        data movement — at 100 TB a rename costs one sidecar write)
-        and the per-version files are written as for every commit,
-        with ``cm`` (None keeps the current mapping) and
+        data movement — at 100 TB a rename costs one commit record
+        write) and the version's metadata is written as for every
+        commit, with ``cm`` (None keeps the current mapping) and
         ``new_schema`` (None keeps the current schema).
 
         Per-column skipping sidecars are keyed by LOGICAL name, so
@@ -3235,9 +3213,9 @@ class TableStore:
         'streaming read across a column mapping change' failure,
         surfaced as a contract instead of silent NULLs). The break is
         allocated BEFORE the pointer CAS (the flocked version counter
-        makes every later record allocation larger) and written into
-        the new version dir, so it commits with the flip: a
-        conflicting or crashed rename leaves no phantom break that
+        makes every later record allocation larger) and recorded in
+        the new version's commit record, so it commits with the flip:
+        a conflicting or crashed rename leaves no phantom break that
         silently truncates a feed whose schema never changed."""
         version_dir = f"{name}.v{uuid.uuid4().hex[:12]}"
         full = os.path.join(self.root, version_dir)
@@ -3247,9 +3225,13 @@ class TableStore:
             full,
             current,
             op,
-            stats_key=(self._load_file_stats(current) or {}).get("key"),
-            schema=current if new_schema is None else new_schema,
+            schema=new_schema,
             colmap=cm,
+            schema_break=(
+                self._next_commit_version(name)
+                if schema_break and self._changelog_enabled(name)
+                else 0
+            ),
             **details,
         )
         moves: dict[str, str | None] = {}
@@ -3275,11 +3257,6 @@ class TableStore:
                     os.rename(
                         os.path.join(full, src), os.path.join(full, dst)
                     )
-        if schema_break and self._changelog_enabled(name):
-            self._write_json_sidecar(
-                os.path.join(full, self._BREAKFILE),
-                self._next_commit_version(name),
-            )
         self._commit_pointer(
             name, version_dir, based_on=os.path.basename(current)
         )
@@ -3288,7 +3265,7 @@ class TableStore:
     def rename_column(self, name: str, old: str, new: str) -> None:
         """``ALTER TABLE ... RENAME COLUMN old TO new`` — the Delta
         column-mapping analog: a METADATA-ONLY commit (hard-linked
-        files + a ``_COLMAP.json`` logical->physical mapping; zero
+        files + a logical->physical mapping in the commit record; zero
         data rewritten, no Spark job). Reads at this and later
         versions surface ``new``; time travel to earlier versions
         still surfaces ``old`` (the mapping is versioned). Later
@@ -3304,7 +3281,7 @@ class TableStore:
         if current is None:
             raise FileNotFoundError(f"table {name} does not exist")
         self._colmap_guard(name, old, "rename")
-        cm = self._load_colmap(current) or self._identity_colmap(current)
+        cm = self._colmap_or_identity(current)
         # resolve case-insensitively like Spark's analyzer — a query
         # can reference 'BAL_C' while the map stores 'bal_c'; the
         # stored casing is what the mapping and sidecars key on
@@ -3352,7 +3329,7 @@ class TableStore:
         if current is None:
             raise FileNotFoundError(f"table {name} does not exist")
         self._colmap_guard(name, col, "drop")
-        cm = self._load_colmap(current) or self._identity_colmap(current)
+        cm = self._colmap_or_identity(current)
         resolved = self._resolve_stored_case(cm["map"], col)
         if resolved is None:
             raise ValueError(
@@ -3385,10 +3362,11 @@ class TableStore:
         from pyspark.sql import types as T
 
         new_dt = T._parse_datatype_string(data_type)
-        fields = self._logical_fields(current)
+        meta = self._version_meta(current)
+        fields = self._logical_fields(meta)
         if fields is None:
             raise ValueError(
-                f"table {name!r} has no schema sidecar — add_column "
+                f"table {name!r} records no schema — add_column "
                 "needs one (re-create via write/write_partitioned)"
             )
         if col.lower() in {c.lower() for c in fields}:
@@ -3399,7 +3377,7 @@ class TableStore:
             raise ValueError(
                 f"column name {col!r} is reserved (internal prefix)"
             )
-        cm = self._load_colmap(current)
+        cm = meta.get("colmap")
         phys = col
         if cm is not None:
             used = set(cm["map"].values()) | set(cm.get("retired") or [])
@@ -3409,8 +3387,7 @@ class TableStore:
                 "map": {**cm["map"], col: phys},
                 "retired": list(cm.get("retired") or []),
             }
-        with open(os.path.join(current, self._SCHEMAFILE)) as f:
-            schema_doc = json.load(f)
+        schema_doc = meta["schema"]
         schema_doc.setdefault("fields", []).append(
             {
                 "name": phys,
@@ -3478,7 +3455,7 @@ class TableStore:
     def widen_column(self, name: str, col: str, new_type: str) -> None:
         """``ALTER TABLE ... ALTER COLUMN ... TYPE <wider>`` — the
         Delta TYPE WIDENING analog: a METADATA-ONLY commit (every data
-        file hard-links; only the schema sidecar changes) that widens
+        file hard-links; only the stored schema changes) that widens
         a column's declared type. Old files keep their narrow physical
         encoding and the parquet reader upcasts them at scan time;
         files written by later merges carry the wide type — the same
@@ -3518,10 +3495,11 @@ class TableStore:
                 "a hash key's type"
             )
         new_dt = T._parse_datatype_string(new_type)
-        fields = self._logical_fields(current)
+        meta = self._version_meta(current)
+        fields = self._logical_fields(meta)
         if fields is None:
             raise ValueError(
-                f"table {name!r} has no schema sidecar — widen needs "
+                f"table {name!r} records no schema — widen needs "
                 "one (re-create via write/write_partitioned)"
             )
         if col not in fields:
@@ -3542,11 +3520,10 @@ class TableStore:
                 "scale growth); anything else rewrites — read, cast, "
                 "write_partitioned"
             )
-        cm = self._load_colmap(current)
+        cm = meta.get("colmap")
         phys = cm["map"].get(col, col) if cm is not None else col
-        # the sidecar exists: _logical_fields above read it
-        with open(os.path.join(current, self._SCHEMAFILE)) as f:
-            schema_doc = json.load(f)
+        # the schema exists: _logical_fields above read it
+        schema_doc = meta["schema"]
         hit = False
         for fld in schema_doc.get("fields", []):
             if fld.get("name") == phys:
@@ -3571,25 +3548,16 @@ class TableStore:
     # --- changelog schema-break (column mapping x CDF) --------------------
     #
     # The break lives IN the version, like the rest of a commit's
-    # metadata: the rename/drop/widen DDL writes the break it
-    # allocated into its new version dir before the pointer flip, and
-    # ``_flip_pointer`` carries max(current's, incoming's) into every
-    # incoming version under the commit lock, so the break never
-    # decreases. It lands atomically with the DDL: a crash before the
-    # flip leaves an uncommitted dir (no break, no spurious feed
+    # metadata: the rename/drop/widen DDL records the break it
+    # allocated in its new version's commit record before the pointer
+    # flip, and ``_flip_pointer`` carries max(current's, incoming's)
+    # into every incoming record under the commit lock, so the break
+    # never decreases. It lands atomically with the DDL: a crash before
+    # the flip leaves an uncommitted dir (no break, no spurious feed
     # restart), a crash after it leaves the break committed (feed
     # reads never fall back to mergeSchema across the rename, which
     # would SPLIT the logical column into silent NULLs), and a
     # CAS-beaten DDL's dir is removed together with its break.
-
-    _BREAKFILE = "_BREAK.json"
-
-    def _load_break(self, version_full: str) -> int:
-        try:
-            with open(os.path.join(version_full, self._BREAKFILE)) as f:
-                return int(json.load(f))
-        except (OSError, ValueError, TypeError):
-            return 0
 
     def schema_break_version(self, name: str) -> int:
         """First changelog commit version whose records carry the
@@ -3597,11 +3565,9 @@ class TableStore:
         on a changelog table; 0 when the feed never crossed one. Read
         from the current version."""
         cur = self.current_path(name)
-        return 0 if cur is None else self._load_break(cur)
+        return 0 if cur is None else self._version_meta(cur).get("break", 0)
 
     # --- file-level min/max pruning (Delta data-skipping analog) ----------
-
-    _FILESTATS = "_FILESTATS.json"
 
     @staticmethod
     def _file_key_bounds(path: str, key: str) -> list | None:
@@ -3634,21 +3600,20 @@ class TableStore:
         except Exception:
             return None
 
-    def _write_file_stats(
-        self, version_full: str, key: str, *carry_from: str
-    ) -> None:
-        """Sidecar ``_FILESTATS.json`` inside the version dir: per-file
-        [min, max] of the merge key. Hard-linked files keep their
-        relative path across versions, so their stats are carried over
-        from the sidecars of the ``carry_from`` versions (when keyed
-        on the same column; later ones win) instead of re-read; only
-        newly written files pay a footer read (metadata-scale). The
-        leading underscore keeps Spark's parquet reader from touching
-        it."""
+    def _file_stats(
+        self, version_full: str, key: str, *carry_from: dict
+    ) -> dict:
+        """The version's merge-key file stats (commit record
+        ``file_stats``): per-file [min, max] of ``key``. Hard-linked
+        files keep their relative path across versions, so their stats
+        are carried over from the ``carry_from`` versions' records
+        (their ``meta``, when keyed on the same column; later ones
+        win) instead of re-read; only newly written files pay a footer
+        read (metadata-scale)."""
         carry: dict = {}
-        for src in carry_from:
-            stats = self._load_file_stats(src)
-            if stats is not None and stats.get("key") == key:
+        for meta in carry_from:
+            stats = meta.get("file_stats", {})
+            if stats.get("key") == key:
                 carry.update(stats.get("files") or {})
         files: dict[str, list | None] = {}
         for entry in os.listdir(version_full):
@@ -3667,10 +3632,7 @@ class TableStore:
                     if rel in carry
                     else self._file_key_bounds(os.path.join(pdir, fname), key)
                 )
-        self._write_json_sidecar(
-            os.path.join(version_full, self._FILESTATS),
-            {"key": key, "files": files},
-        )
+        return {"key": key, "files": files}
 
     _BLOOM_PREFIX = "_BLOOM."
     _MINMAX_PREFIX = "_MINMAX."
@@ -3678,8 +3640,8 @@ class TableStore:
     def _carry_bloom_sidecars(self, src_full: str, dst_full: str) -> None:
         """Carry per-column file-skipping sidecars — bloom bitsets AND
         secondary-column min/max bounds (operators/skipping.py) —
-        across a version rewrite, the way ``_write_file_stats``
-        carries the merge key's bounds: entries for files hard-linked
+        across a version rewrite, the way ``_file_stats`` carries the
+        merge key's bounds: entries for files hard-linked
         into the new version (same relative path AND same inode) are
         still valid and copy over; rewritten files stay unindexed in
         the new sidecar. The probe side treats an unindexed file as
@@ -3731,16 +3693,6 @@ class TableStore:
                     pass
             meta["files"] = kept
             self._write_json_sidecar(dst_p, meta)
-
-    def _load_file_stats(self, version_full: str) -> dict | None:
-        p = os.path.join(version_full, self._FILESTATS)
-        if not os.path.exists(p):
-            return None
-        try:
-            with open(p) as f:
-                return json.load(f)
-        except Exception:
-            return None
 
     @staticmethod
     def _simple_partition_dir(part_col: str, value) -> str | None:
@@ -3875,7 +3827,8 @@ class TableStore:
         # had that safety net.
         # logical view of the stored schema (column mapping applied):
         # merge keys arrive as LOGICAL names
-        tfields = self._logical_fields(current)
+        meta = self._version_meta(current)
+        tfields = self._logical_fields(meta)
         if tfields is not None:
             for k in keys:
                 want = tfields.get(k)
@@ -3948,7 +3901,7 @@ class TableStore:
         # rewrite a few more files — extra rewrites, never wrong rows.
         key0 = keys[0]
         target_all = self._read_version(current)
-        stats = self._load_file_stats(current)
+        stats = meta.get("file_stats")
         src_key_dtype = dict(src.dtypes).get(key0, "")
         integral = src_key_dtype in ("tinyint", "smallint", "int", "bigint")
         key_aggs = (
@@ -3970,14 +3923,14 @@ class TableStore:
         )
 
         # File-level pruning within affected partitions (the Delta
-        # data-skipping analog): the sidecar has per-file [min, max] of
-        # the merge key; only files whose key range can intersect the
-        # source's key range IN THAT PARTITION are rewritten — the
-        # rest are hard-linked. Applies when the sidecar matches
-        # keys[0], the key is integral, and every affected partition
-        # value maps to its dir name without Spark's escape encoding;
-        # otherwise all files of affected partitions rewrite (the
-        # round-2 behavior — still correct).
+        # data-skipping analog): the file stats have per-file [min,
+        # max] of the merge key; only files whose key range can
+        # intersect the source's key range IN THAT PARTITION are
+        # rewritten — the rest are hard-linked. Applies when the stats
+        # are keyed on keys[0], the key is integral, and every affected
+        # partition value maps to its dir name without Spark's escape
+        # encoding; otherwise all files of affected partitions rewrite
+        # (the round-2 behavior — still correct).
         affected_dirs: dict[str, object] = {}
         all_simple = True
         for v in affected:
@@ -4033,18 +3986,11 @@ class TableStore:
                 for fname in sorted(fnames)
             ]
             if hit_paths:
-                # basePath keeps the partition column visible when
-                # reading individual files; the stored schema keeps
-                # mixed-schema versions (post-evolution) reading with
-                # NULL-filled new columns
-                reader = self._schema_reader(current, base_path=True)
-                # DV-wrap the direct file read too, or deleted rows
-                # would resurrect into the rewritten files; the column
-                # mapping then lifts physical names to logical ones
-                target_affected = self._apply_colmap(
-                    self._dv_filter(reader.parquet(*hit_paths), current),
-                    current,
-                )
+                # the stored schema keeps mixed-schema versions
+                # (post-evolution) reading with NULL-filled new
+                # columns, and the DV-wrapped read keeps deleted rows
+                # out of the rewritten files
+                target_affected = self._read_version(current, hit_paths)
             else:
                 target_affected = target_all.filter(F.lit(False))
             if spec["mode"] == "hash":
@@ -4114,7 +4060,7 @@ class TableStore:
         # per-merge range clustering: a trickle batch's output is tiny
         # and an extra exchange per micro-batch measurably hurts (the
         # fitbit E2E replay paid ~40% wall for it); the new files'
-        # bounds are still footer-recorded in the sidecar, so later
+        # bounds are still footer-recorded in the file stats, so later
         # merges prune against them correctly — range DISJOINTNESS
         # (maximal skipping) is established at write_partitioned and
         # re-established by optimize(), the compaction cadence any
@@ -4138,9 +4084,7 @@ class TableStore:
         # hard-linked survivors: write PHYSICAL column names (the
         # column mapping lifts them back at read; evolution-added
         # logical columns extend the mapping here)
-        merged, cm_out = self._to_physical(
-            merged, self._load_colmap(current)
-        )
+        merged, cm_out = self._to_physical(merged, meta.get("colmap"))
         if cluster_into is None:
             # window-fused policies arrive already exchanged once on
             # part_col (cluster_into above); everything else pays the
@@ -4287,7 +4231,7 @@ class TableStore:
         ``evolve_schema=True`` enables schema evolution (the Delta
         ``autoMerge`` analog): new source columns become new table
         columns (NULL for pre-existing rows; old parquet files are NOT
-        rewritten — the per-version schema sidecar fills the gap at
+        rewritten — the per-version stored schema fills the gap at
         read time), and a source missing target columns inserts NULLs
         there instead of erroring.
         """
@@ -4460,9 +4404,9 @@ class TableStore:
         """Latest retained version committed at or before ``ts`` — the
         resolution step behind ``TIMESTAMP AS OF``. ``ts`` is epoch
         seconds, a ``datetime``, or an ISO-8601 string. Commit time
-        comes from each version's commit-info sidecar (``history()``'s
-        ``ts_epoch``); versions predating the sidecar fall back to the
-        dir mtime (which later sidecar builds may touch — one-sided:
+        comes from each version's commit record (``history()``'s
+        ``ts_epoch``); versions without a readable record fall back to
+        the dir mtime (which later sidecar builds may touch — one-sided:
         a too-new mtime can only make this pick an OLDER version).
         Raises when ``ts`` predates every retained version — outside
         the ``keep_versions`` window, exactly like a pruned
@@ -4477,12 +4421,11 @@ class TableStore:
             raise FileNotFoundError(f"table {name} has no versions")
         best = None
         for v in vs:  # oldest -> newest
-            p = os.path.join(self.root, v, self._OPFILE)
+            full = os.path.join(self.root, v)
             try:
-                with open(p) as f:
-                    vts = float(json.load(f)["ts"])
-            except Exception:
-                vts = os.path.getmtime(os.path.join(self.root, v))
+                vts = float(self._commit_record(full)["ts"])
+            except (KeyError, TypeError, ValueError):
+                vts = os.path.getmtime(full)
             if vts <= ts:
                 best = v
         if best is None:
@@ -4520,10 +4463,14 @@ class TableStore:
         """Zero-copy table clone — the Delta ``SHALLOW CLONE`` analog
         (CREATE TABLE dst SHALLOW CLONE src): ``dst`` becomes an
         independent table whose version 1 hard-links every file of
-        ``src``'s current version (data, schema, file-stats and bloom
-        sidecars — no data movement, no Spark job) and copies the
-        partition spec, so merges on the clone take the same pruned
-        path as on the source. From then on the tables diverge: a
+        ``src``'s current version (data and skipping sidecars — no data
+        movement, no Spark job), records the source's schema, column
+        mapping, deletion vector and file stats verbatim in its own
+        commit record (not its provenance or schema break: the clone
+        has no parent version, and its feed has its own version
+        counter) and copies the partition spec, so merges on the clone
+        take the same pruned path as on the source. From then on the
+        tables diverge: a
         mutation on either rewrites only ITS affected partitions into
         its own new version while the untouched files stay shared on
         disk (the same copy-on-write economics as version history —
@@ -4562,6 +4509,15 @@ class TableStore:
             version_dir = f"{dst}.v{uuid.uuid4().hex[:12]}"
             full = os.path.join(self.root, version_dir)
             os.makedirs(full)
+            # verbatim, not through the inode-checked carry: a deep
+            # clone's copies are new inodes, and dropping their DV
+            # entries would bring deleted rows back
+            src_meta = self._version_meta(src_path)
+            meta = {
+                k: src_meta[k]
+                for k in ("schema", "colmap", "dv", "file_stats")
+                if k in src_meta
+            }
             try:
                 for base, dirs, files in os.walk(src_path):
                     # a fork never inherits its source commit's
@@ -4571,14 +4527,8 @@ class TableStore:
                     d = full if rel == "." else os.path.join(full, rel)
                     os.makedirs(d, exist_ok=True)
                     for fname in files:
-                        # the clone writes its own commit info, and
-                        # its feed (own version counter) starts with
-                        # no schema break
-                        if fname in (
-                            self._OPFILE,
-                            self._STAGED_MANIFEST,
-                            self._BREAKFILE,
-                        ):
+                        # the clone writes its own commit record
+                        if fname in (self._OPFILE, self._STAGED_MANIFEST):
                             continue
                         (shutil.copy2 if deep else os.link)(
                             os.path.join(base, fname), os.path.join(d, fname)
@@ -4613,6 +4563,7 @@ class TableStore:
         self._write_op(
             full,
             "clone",
+            meta,
             source=os.path.basename(src_path),
             deep=bool(deep),
         )
@@ -4634,8 +4585,9 @@ class TableStore:
         so a restore can be restored away again and ``versions()``
         ordering holds);
         it costs zero data movement — every data file of the source
-        version is hard-linked into the new version dir and its schema
-        and data-skipping sidecars carry over — and no Spark job
+        version is hard-linked into the new version dir and its schema,
+        column mapping, deletion vector, provenance and data-skipping
+        indexes carry over — and no Spark job
         unless the changelog is on.
 
         With the table's changelog enabled, pass ``keys``: the restore
@@ -4665,10 +4617,12 @@ class TableStore:
                 "so the restore can commit its row-level diff"
             )
         cur_for_diff = self.current_path(name)
+        src_meta = self._version_meta(src)
         if (
             log_changes
             and cur_for_diff is not None
-            and self._load_colmap(cur_for_diff) != self._load_colmap(src)
+            and self._version_meta(cur_for_diff).get("colmap")
+            != src_meta.get("colmap")
         ):
             # the row diff would compare two different LOGICAL views
             # of the table (a rename in between makes the same
@@ -4686,19 +4640,19 @@ class TableStore:
         full = os.path.join(self.root, version_dir)
         os.makedirs(full)
         self._link_parent(src, full, {}, root_files=True)
+        # the source's partition provenance (what it rewrote relative
+        # to its parent) holds for the restored content as well
         self._write_version_files(
             full,
             src,
             "restore",
-            stats_key=(self._load_file_stats(src) or {}).get("key"),
-            schema=src,
+            provenance={
+                k: src_meta[k]
+                for k in ("rewritten", "based_on", "neutral")
+                if k in src_meta
+            },
             source=version,
         )
-        # the source's partition provenance (what it rewrote relative
-        # to its parent) holds for the restored content as well
-        rewritten = os.path.join(src, self._REWRITTENFILE)
-        if os.path.exists(rewritten):
-            os.link(rewritten, os.path.join(full, self._REWRITTENFILE))
         if log_changes:
             # staged pre-flip (crash-atomic CDF): the rollback diff
             # reads the new dir directly
@@ -4878,7 +4832,7 @@ class TableStore:
             # each SET result is cast back to the column's declared
             # type (Delta UPDATE semantics): without it an implicit
             # widening (int / 2 -> double) would write partition files
-            # that contradict the schema sidecar and the hard-linked
+            # that contradict the stored schema and the hard-linked
             # untouched files — unreadable AFTER the pointer flip
             return df.select(
                 *[
@@ -5146,17 +5100,17 @@ class TableStore:
         # rewritten partitions mix with hard-linked ones: write
         # physical column names (mutations never add columns, so the
         # mapping itself is unchanged)
-        cm_cur = self._load_colmap(current)
+        meta = self._version_meta(current)
+        cm_cur = meta.get("colmap")
         out, _cm = self._to_physical(out, cm_cur)
         # same bounded-output clustering as the pruned merge: one file
         # per rewritten partition, not scan-tasks x dirs
         out = out.repartition(F.col(part_col))
         out.write.mode("overwrite").partitionBy(part_col).parquet(scratch)
         plain = matches.drop(part_col) if spec["mode"] == "hash" else matches
-        stats = self._load_file_stats(current)
         # a fully-emptied partition leaves no scratch dir but changed
         # content; non-simple values rewrote the whole table (nothing
-        # links) and an unprovable partition set — no _REWRITTEN, so
+        # links) and an unprovable partition set — no provenance, so
         # conflict detection stays conservative
         self._commit_version(
             name,
@@ -5167,7 +5121,7 @@ class TableStore:
                 affected_dirs if simple else os.listdir(current)
             ),
             touched=set(affected_dirs) if simple else None,
-            stats_key=(stats or {}).get("key")
+            stats_key=meta.get("file_stats", {}).get("key")
             or (spec.get("keys") or [None])[0],
             schema=self._to_physical(df_all, cm_cur)[0],
             stage=(
@@ -5272,11 +5226,11 @@ class TableStore:
         partition (default: all) as one range-clustered file set
         (AQE sizes the count; files regain disjoint merge-key ranges,
         restoring maximal skipping power), hard-links unselected
-        partitions, refreshes the data-skipping sidecar, and validates
+        partitions, refreshes the merge-key file stats, and validates
         row-count identity before the pointer flip. Logically a no-op:
         the changelog records nothing.
 
-        ``key`` defaults to the sidecar's stats key (or the hash
+        ``key`` defaults to the file stats' key (or the hash
         spec's first key) — pass it explicitly for column-partitioned
         tables created before any merge.
 
@@ -5310,9 +5264,12 @@ class TableStore:
         current = self.current_path(name)
         if current is None:
             raise FileNotFoundError(f"table {name} does not exist")
-        stats = self._load_file_stats(current)
+        meta = self._version_meta(current)
         if key is None:
-            key = (stats or {}).get("key") or (spec.get("keys") or [None])[0]
+            key = (
+                meta.get("file_stats", {}).get("key")
+                or (spec.get("keys") or [None])[0]
+            )
         if key is None:
             raise ValueError("pass key=<merge key> for this table")
         df_all = self._read_version(current)
@@ -5419,7 +5376,7 @@ class TableStore:
         # physical column names for files that sit beside hard-linked
         # unselected partitions (narrow projection — the cluster sort
         # order within each write task is preserved)
-        cm_cur = self._load_colmap(current)
+        cm_cur = meta.get("colmap")
         out, _cm = self._to_physical(out, cm_cur)
         writer = out.write.mode("overwrite")
         if max_records is not None:
@@ -5435,7 +5392,7 @@ class TableStore:
         # compaction participates in partition-level OCC as a NEUTRAL
         # commit: it records which partitions it rewrote (so later
         # writers' chain walks stay provable THROUGH a compaction —
-        # previously the missing sidecar read as 'touched everything'
+        # previously a missing record read as 'touched everything'
         # and every in-flight writer conflict-retried after each
         # optimize), flagged layout-only (content is row-identical by
         # the validation count above, so it never logically conflicts),

@@ -36,16 +36,28 @@ from pyspark.sql import functions as F
 from .merge import TableStore, local_path_from_uri
 
 
-def _version_reader(store: TableStore, version_dir: str):
-    """Reader pinned to the version's STORED schema (plus basePath so
-    partition columns resolve on per-file reads): direct candidate /
-    builder reads must see the same types as ``_read_version`` — after
-    a type widening the physical files mix narrow and wide encodings,
-    and an inferred read would either hash/compare the narrow type
-    (xxhash64 is type-sensitive: a bloom built over raw int values
-    never matches probes cast to the table's bigint — silent
-    zero-candidate pruning) or fail to merge the footers outright."""
-    return store._schema_reader(version_dir, base_path=True)
+def _logical_files(
+    store: TableStore, version_dir: str, rels: list[str]
+) -> DataFrame:
+    """Logical rows of the version's files ``rels`` for an index
+    build: read with the STORED schema (plus basePath so partition
+    columns resolve) and the column mapping applied, from one commit
+    record read. Builder reads must see the same types as
+    ``_read_version`` — after a type widening the physical files mix
+    narrow and wide encodings, and an inferred read would either
+    hash/compare the narrow type (xxhash64 is type-sensitive: a bloom
+    built over raw int values never matches probes cast to the
+    table's bigint — silent zero-candidate pruning) or fail to merge
+    the footers outright. No deletion-vector filter: a per-file index
+    over every stored row is a superset of the visible rows, which
+    keeps pruning one-sided."""
+    meta = store._version_meta(version_dir)
+    return store._apply_colmap(
+        store._schema_reader(meta, version_dir).parquet(
+            *[os.path.join(version_dir, rel) for rel in rels]
+        ),
+        meta.get("colmap"),
+    )
 
 
 def _sidecar_path(version_dir: str, col: str) -> str:
@@ -101,11 +113,7 @@ def build_bloom_sidecar(
     if missing:
         # scan ONLY the unindexed files; basePath keeps partition
         # columns resolvable even when ``col`` is one of them
-        df = store._apply_colmap(
-            _version_reader(store, version_dir)
-            .parquet(*[os.path.join(version_dir, rel) for rel in missing]),
-            version_dir,
-        )
+        df = _logical_files(store, version_dir, missing)
         pos_cols = [
             F.pmod(F.xxhash64(F.col(col), F.lit(i)), F.lit(n_bits)).alias(
                 f"__p{i}"
@@ -225,12 +233,11 @@ def read_where_eq(
             0,
             total,
         )
-    reader = _version_reader(store, version_dir)
-    # DV-wrap the direct file read (no-op without a deletion vector),
-    # then lift physical names to logical (column mapping; no-op too)
-    df = store._apply_colmap(
-        store._dv_filter(reader.parquet(*cand), version_dir), version_dir
-    ).filter(F.col(col) == F.lit(value))
+    # the version read DV-wraps the direct file read and lifts physical
+    # names to logical ones (both no-ops without a DV / mapping)
+    df = store._read_version(version_dir, cand).filter(
+        F.col(col) == F.lit(value)
+    )
     return df, len(cand), total
 
 
@@ -244,8 +251,8 @@ def _minmax_path(version_dir: str, col: str) -> str:
 def build_minmax_sidecar(store: TableStore, name: str, col: str) -> int:
     """Per-file [min, max] bounds of an ARBITRARY column for the
     table's CURRENT version — the secondary-column generalization of
-    the store's merge-key ``_FILESTATS`` sidecar, and the read side of
-    ``optimize(zorder_by=...)``: after a Z-order rewrite each file
+    merge-key file stats in each version's commit record, and the read
+    side of ``optimize(zorder_by=...)``: after a Z-order rewrite each file
     covers a tight range of BOTH clustered columns, so range probes on
     EITHER prune to the few intersecting files. Returns the number of
     files scanned. INCREMENTAL across mutations exactly like the bloom
@@ -270,11 +277,7 @@ def build_minmax_sidecar(store: TableStore, name: str, col: str) -> int:
     sidecar = {rel: existing[rel] for rel in all_rel if rel in existing}
     missing = [rel for rel in all_rel if rel not in existing]
     if missing:
-        df = store._apply_colmap(
-            _version_reader(store, version_dir)
-            .parquet(*[os.path.join(version_dir, rel) for rel in missing]),
-            version_dir,
-        )
+        df = _logical_files(store, version_dir, missing)
         per_file = (
             df.select(F.input_file_name().alias("__f"), F.col(col))
             .groupBy("__f")
@@ -353,12 +356,8 @@ def read_where_between(
         return store.read(name).filter(cond), total, total
     if not cand:
         return store.read(name).filter(F.lit(False)), 0, total
-    reader = _version_reader(store, version_dir)
     return (
-        store._apply_colmap(
-            store._dv_filter(reader.parquet(*cand), version_dir),
-            version_dir,
-        ).filter(cond),
+        store._read_version(version_dir, cand).filter(cond),
         len(cand),
         total,
     )
@@ -415,12 +414,8 @@ def read_where(
         return store.read(name).filter(cond), total, total
     if not cand:
         return store.read(name).filter(F.lit(False)), 0, total
-    reader = _version_reader(store, version_dir)
     return (
-        store._apply_colmap(
-            store._dv_filter(reader.parquet(*sorted(cand)), version_dir),
-            version_dir,
-        ).filter(cond),
+        store._read_version(version_dir, sorted(cand)).filter(cond),
         len(cand),
         total,
     )

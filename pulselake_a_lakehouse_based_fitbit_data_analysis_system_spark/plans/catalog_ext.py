@@ -7910,8 +7910,8 @@ FROM (VALUES
     "DESCRIBE HISTORY + VACUUM DRY RUN (merge.py:730-815) — the last "
     "two lifecycle verbs, driven through a full build -> merge -> "
     "delete -> restore arc on one table (keep_versions=4 retains the "
-    "whole history). history() reads one tiny _OP.json sidecar per "
-    "version — driver-side metadata, no data scan — and its "
+    "whole history). history() reads each version's _OP.json commit "
+    "record — driver-side metadata, no data scan — and its "
     "operation column pins the exact commit sequence. vacuum("
     "keep_versions=2, dry_run=True) then reports the two versions "
     "outside the tightened window: files_flag pins that doomed "
@@ -8389,7 +8389,7 @@ FROM customer
     "is simulated deterministically with a two-call stale "
     "current_path, the same seam store_concurrent_write_conflict "
     "uses) — instead of raising, the commit walks the intervening "
-    "commits' _REWRITTEN sidecars, proves them disjoint from B's "
+    "commits' provenance records, proves them disjoint from B's "
     "partitions, and REBASES: a new version takes A's partitions by "
     "hard link plus B's rewritten one, so both writers land with "
     "zero retries and zero data movement (links_carried pins "
@@ -9126,9 +9126,10 @@ FROM customer
     "balance and a later DROP are METADATA-ONLY commits — every "
     "parquet file hard-links into the new version "
     "(rename/drop_metadata_only pin per-file inode equality at "
-    "runtime) and only the versioned _COLMAP.json logical->physical "
-    "mapping changes; at 100 TB a rename costs one sidecar write, "
-    "not a table rewrite. The pruned merge AFTER the rename keeps "
+    "runtime) and only the logical->physical mapping in the version's "
+    "_OP.json commit record changes; at 100 TB a rename costs one "
+    "metadata write, not a table rewrite. The pruned merge AFTER the "
+    "rename keeps "
     "writing the physical name (its files stay byte-compatible with "
     "the hard-linked survivors), time travel to v0 still surfaces "
     "the OLD logical name (time_travel_old_name), and the "
@@ -9856,7 +9857,7 @@ FROM customer
     _OPTIMIZE_NEUTRAL_OCC_ORACLE,
     "OPTIMIZE as a content-NEUTRAL OCC participant (merge.py r13 — "
     "Delta's compaction-vs-writer semantics; previously a compaction "
-    "wrote no _REWRITTEN sidecar, so it discarded its whole job on "
+    "recorded no rewritten partitions, so it discarded its whole job on "
     "any CAS miss AND turned every later writer's conflict-chain walk "
     "unprovable): (1) a compaction whose snapshot was superseded by a "
     "disjoint-partition merge REBASES instead of raising "
@@ -9875,8 +9876,6 @@ FROM customer
     tags=("merge", "store", "concurrency", "lakehouse", "optimize"),
 )
 def q_optimize_neutral_occ(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import json as _json
-    import os as _os
     import tempfile as _tf
 
     from ..operators.merge import TableStore
@@ -9926,15 +9925,11 @@ def q_optimize_neutral_occ(spark: SparkSession, sf_dir: str) -> DataFrame:
         store.optimize("t", partitions=others, key="c_custkey")
     finally:
         del store.current_path
-    v3 = store.current_path("t")
-    with open(_os.path.join(v3, TableStore._OPFILE)) as f:
-        rec = _json.load(f)
-    with open(_os.path.join(v3, TableStore._REWRITTENFILE)) as f:
-        rw = _json.load(f)
+    rec = store._commit_record(store.current_path("t"))
     optimize_rebased = (
         rec.get("op") == "optimize"
         and bool(rec.get("rebased_onto"))
-        and rw.get("neutral") is True
+        and rec["meta"].get("neutral") is True
     )
     cols = ["c_custkey", "c_mktsegment", "bal_c"]
     merge_survived = (

@@ -453,14 +453,15 @@ class FitbitPipeline:
         )
         self.store.merge("user_bins", bins, ["user_id"], "scd1")
 
-    def build_user_bins_incremental(self, timeout_sec: int = 120) -> None:
+    def build_user_bins_incremental(self, timeout_sec: float) -> None:
         """user_bins maintained from user_profile's change stream — the
         reference's actual silver-on-silver shape (S4,
         ``Silver/05-silver.py:329-346``: user_bins streams the users
         table with ``ignoreChanges``). Each drained micro-batch holds
         only changed/new profiles; bins recompute for exactly those
         users and SCD-1 merge into the dim — O(changes), not O(users),
-        per run."""
+        per run. The drain is a one-query wave: past ``timeout_sec``
+        the query is stopped and ``TimeoutError`` raised."""
         users = self.store.read("users").select("user_id")
 
         def upsert(batch: DataFrame, _id: int) -> None:
@@ -478,20 +479,28 @@ class FitbitPipeline:
             )
             self.store.merge("user_bins", bins, ["user_id"], "scd1")
 
-        q = (
-            self.store.stream_changes("user_profile")
-            .writeStream.foreachBatch(upsert)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", os.path.join(self.ckpt, "sv_user_bins_cdf")
-            )
-            .queryName("sv_user_bins_cdf")
-            .trigger(availableNow=True)
-            .start()
+        self._drain_changes(
+            "user_profile", "sv_user_bins_cdf", "user_bins", upsert, timeout_sec
         )
-        q.awaitTermination(timeout_sec)
-        if q.exception() is not None:
-            raise q.exception()
+
+    def _drain_changes(
+        self, table: str, query: str, wave: str, upsert, timeout_sec: float
+    ) -> None:
+        """Drain ``table``'s change feed through ``upsert`` (a
+        foreachBatch function) as the one-query wave ``wave``."""
+
+        def start():
+            return (
+                self.store.stream_changes(table)
+                .writeStream.foreachBatch(upsert)
+                .outputMode("append")
+                .option("checkpointLocation", os.path.join(self.ckpt, query))
+                .queryName(query)
+                .trigger(availableNow=True)
+                .start()
+            )
+
+        run_waves(self.spark, [StreamWave(wave, [start])], timeout_sec=timeout_sec)
 
     # -- silver wave 3 ------------------------------------------------------
 
@@ -585,7 +594,7 @@ class FitbitPipeline:
         the measure columns (sessions grow as late bpm lands)."""
         self._merge_gold(self._bpm_summary(self.store.read("workout_bpm")))
 
-    def build_gold_incremental(self, timeout_sec: int = 120) -> None:
+    def build_gold_incremental(self, timeout_sec: float) -> None:
         """workout_bpm_summary maintained from workout_bpm's change
         stream — the reference's actual gold shape
         (``Gold/06-gold.py:86-112``: the summary MERGE *streams*
@@ -600,7 +609,9 @@ class FitbitPipeline:
         answer (same as the reference's update-mode streaming agg).
         Touched-key broadcast is bounded by the micro-batch, not the
         table; a from-zero backfill batch degenerates to the full
-        recompute, which is the correct cost for that case."""
+        recompute, which is the correct cost for that case. The drain
+        is a one-query wave: past ``timeout_sec`` the query is stopped
+        and ``TimeoutError`` raised."""
 
         def upsert(batch: DataFrame, _id: int) -> None:
             touched = batch.select(*self.GOLD_KEYS).distinct()
@@ -609,20 +620,9 @@ class FitbitPipeline:
             )
             self._merge_gold(self._bpm_summary(wb))
 
-        q = (
-            self.store.stream_changes("workout_bpm")
-            .writeStream.foreachBatch(upsert)
-            .outputMode("append")
-            .option(
-                "checkpointLocation", os.path.join(self.ckpt, "gd_bpm_summary_cdf")
-            )
-            .queryName("gd_bpm_summary_cdf")
-            .trigger(availableNow=True)
-            .start()
+        self._drain_changes(
+            "workout_bpm", "gd_bpm_summary_cdf", "gold", upsert, timeout_sec
         )
-        q.awaitTermination(timeout_sec)
-        if q.exception() is not None:
-            raise q.exception()
 
     def summary_slices(self) -> DataFrame:
         """Gold dashboard GROUPING SETS (reference report figs
@@ -762,7 +762,7 @@ class FitbitPipeline:
             timeout_sec=timeout_sec,
         )
         if self.incremental_dims:
-            self.build_user_bins_incremental()
+            self.build_user_bins_incremental(timeout_sec)
         else:
             self.build_user_bins()
         report.update(
@@ -773,7 +773,7 @@ class FitbitPipeline:
             )
         )
         if self.incremental_dims:
-            self.build_gold_incremental()
+            self.build_gold_incremental(timeout_sec)
         else:
             self.build_gold()
         return report

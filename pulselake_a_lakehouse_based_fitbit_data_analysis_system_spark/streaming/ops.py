@@ -435,7 +435,9 @@ def run_stream_to_memory(
     expected_state_rows: int | None = None,
 ) -> DataFrame:
     """Drain a streaming DataFrame with trigger(availableNow) into a
-    memory sink; return the sink contents as a batch DataFrame.
+    memory sink; return the sink contents as a batch DataFrame. A drain
+    still running after ``timeout_sec`` is stopped and raises
+    ``TimeoutError``: a partial sink is never returned.
 
     ``stats_out``, when given, receives ``num_batches`` (micro-batches
     with input the drain executed — so tests can assert the stream
@@ -512,7 +514,11 @@ def run_stream_to_memory(
             .start()
         )
     try:
-        q.awaitTermination(timeout_sec)
+        if not q.awaitTermination(timeout_sec):
+            raise TimeoutError(
+                f"memory-sink drain {name} did not finish within "
+                f"{timeout_sec}s"
+            )
         if stats_out is not None:
             progressed = [p for p in q.recentProgress if p["numInputRows"] > 0]
             stats_out["num_batches"] = len(progressed)

@@ -603,7 +603,9 @@ def test_schema_break_concurrent_sets_are_monotone(spark, tmp_path):
         vdir = f"t.v{uuid.uuid4().hex[:12]}"
         full = _os.path.join(store.root, vdir)
         shutil.copytree(base, full)
-        store._write_json_sidecar(_os.path.join(full, "_BREAK.json"), v)
+        rec = store._commit_record(full)
+        rec["meta"]["break"] = v
+        store._write_json_sidecar(_os.path.join(full, store._OPFILE), rec)
         store._commit_pointer("t", vdir)
 
     threads = [threading.Thread(target=setv, args=(v,)) for v in vers]

@@ -3,8 +3,8 @@ analog (metadata-only schema changes over immutable parquet files).
 
 Reference parity: the reference's Delta tables would use column
 mapping (``delta.columnMapping.mode``) for this; the TableStore
-reproduces the semantics — versioned logical->physical mapping in a
-``_COLMAP.json`` sidecar, zero data rewritten on rename/drop, no
+reproduces the semantics — versioned logical->physical mapping in
+each version's commit record, zero data rewritten on rename/drop, no
 resurrection on re-add, CDF schema-break contract — over plain
 parquet.
 """
@@ -318,7 +318,7 @@ def test_disjoint_rebase_on_mapped_table_carries_colmap(spark, tmp_path):
         del store.current_path
     got = {r["k"]: r["amount"] for r in store.read("t").collect()}
     assert got == {1: 11, 2: 22}  # both writers landed, logical view held
-    assert store._load_colmap(store.current_path("t")) is not None
+    assert store._version_meta(store.current_path("t")).get("colmap") is not None
 
 
 def test_clone_and_restore_carry_mapping(spark, tmp_path):

@@ -176,7 +176,6 @@ def test_optimize_after_replay_restores_disjoint_ranges_and_pruning(
     every partition of the merge-heavy fact table, and a post-optimize
     single-key merge prunes to exactly ONE rewritten file (every other
     file hard-link-survives by inode)."""
-    import json
     import os
 
     pipe = FitbitPipeline(spark, workdir)
@@ -194,8 +193,7 @@ def test_optimize_after_replay_restores_disjoint_ranges_and_pruning(
     } == rows_before, "optimize changed data"
 
     current = store.current_path(table)
-    with open(os.path.join(current, "_FILESTATS.json")) as f:
-        stats = json.load(f)
+    stats = store._version_meta(current)["file_stats"]
     assert stats["key"] == "device_id"
     by_dir: dict[str, list[tuple[int, int]]] = {}
     for relpath, (lo, hi) in stats["files"].items():

@@ -1356,6 +1356,24 @@ def test_run_stream_to_memory_restores_shuffle_partitions_when_start_fails(
     assert spark.conf.get(key) == saved
 
 
+def test_run_stream_to_memory_raises_on_timeout(spark, tmp_path):
+    """A drain that outlives its timeout raises and stops its query
+    instead of returning a partial memory sink."""
+    from pulselake_a_lakehouse_based_fitbit_data_analysis_system_spark.streaming import (
+        ops as stream_ops,
+    )
+
+    src = str(tmp_path / "src")
+    spark.range(100).write.parquet(src)
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError, match="did not finish"):
+        stream_ops.run_stream_to_memory(
+            spark.readStream.schema("id long").parquet(src),
+            timeout_sec=0.001,
+        )
+    assert {q.id for q in spark.streams.active} == active
+
+
 def test_stream_stream_join_sizes_to_four_stores_per_partition(spark):
     """A symmetric stream-stream join instantiates FOUR state stores
     per shuffle partition (left/right x keyToNumValues/
@@ -1734,11 +1752,9 @@ def test_merge_file_level_pruning_single_key_multi_file_partition(spark, tmp_pat
 
 
 def test_merge_file_pruning_sidecar_carries_and_replays(spark, tmp_path):
-    """The _FILESTATS sidecar is refreshed every merge: linked files
-    carry bounds over, new files get footer-read bounds — so skipping
-    keeps working across consecutive merges."""
-    import json as _json
-
+    """The merge-key file stats are refreshed every merge: linked
+    files carry bounds over, new files get footer-read bounds — so
+    skipping keeps working across consecutive merges."""
     store = merge.TableStore(spark, str(tmp_path))
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -1754,9 +1770,9 @@ def test_merge_file_pruning_sidecar_carries_and_replays(spark, tmp_path):
             ["k"],
             policy="scd1",
         )
-        side = os.path.join(store.current_path("t"), "_FILESTATS.json")
-        assert os.path.exists(side)
-        stats = _json.load(open(side))
+        meta = store._version_meta(store.current_path("t"))
+        assert "file_stats" in meta
+        stats = meta["file_stats"]
         assert stats["key"] == "k"
         # every live parquet file has a stats entry with integer bounds
         live = _partition_file_map(store.current_path("t"))["__bucket=0"]
@@ -1882,8 +1898,7 @@ def test_table_store_optimize_compacts_and_preserves(spark, tmp_path):
     after_rows = {r["k"]: r["v"] for r in store.read("t").collect()}
     assert after_rows == before_rows
     assert after_rows[3] == -3 and after_rows[401] == -401
-    side = os.path.join(store.current_path("t"), "_FILESTATS.json")
-    assert os.path.exists(side)
+    assert "file_stats" in store._version_meta(store.current_path("t"))
     # skipping still works post-optimize: a one-key merge into the
     # compacted table leaves every other file inode-equal
     aqe = spark.conf.get("spark.sql.adaptive.enabled")
@@ -3984,7 +3999,7 @@ def test_partition_disjoint_writers_rebase_commit(spark, tmp_path):
     assert v3_files["seg=A"] == v2_files["seg=A"]
     assert v3_files["seg=B"] != v2_files["seg=B"]
     # merge-key stats carried for BOTH sides' files
-    stats = store._load_file_stats(v3)
+    stats = store._version_meta(v3).get("file_stats")
     assert stats is not None and stats["key"] == "k"
     assert set(stats["files"]) == {
         f"{d}/{f}" for d, fs in v3_files.items() for f in fs
@@ -5964,7 +5979,7 @@ def test_rebase_cross_process_disjoint_writers(spark, tmp_path):
     partition. EVERY commit must land (some as rebases — the writers
     genuinely interleave), ZERO ConcurrentWriteErrors, no lost update
     (each partition ends at its writer's final value), and the version
-    chain stays consistent (every hop's _REWRITTEN walks back to the
+    chain stays consistent (every hop's provenance walks back to the
     create version)."""
     from multiprocessing import get_context
 
@@ -5994,7 +6009,7 @@ def test_rebase_cross_process_disjoint_writers(spark, tmp_path):
         assert got[k] == n_iters, (k, got[k])  # no lost update
     assert all(v == 0 for k, v in got.items() if k > 5)
     # version chain consistent: 1 create + 50 commits, and the
-    # _REWRITTEN chain walks from the current all the way back to the
+    # provenance chain walks from the current all the way back to the
     # create version touching exactly the two partitions
     assert len(store.versions("t")) == 1 + 2 * n_iters
     cur = os.path.basename(store.current_path("t"))
@@ -6206,7 +6221,6 @@ def test_partitioned_create_flips_with_file_stats(spark, tmp_path,
     version before the pointer flip: the version is complete the
     moment it becomes current (a replace and a merge-created table
     included), and the stats cover every data file."""
-    import json as _json
 
     store = merge.TableStore(spark, str(tmp_path), keep_versions=4)
     at_flip = []
@@ -6214,7 +6228,7 @@ def test_partitioned_create_flips_with_file_stats(spark, tmp_path,
 
     def spy(self, name, cur_base, version_dir):
         full = os.path.join(self.root, version_dir)
-        at_flip.append(os.path.exists(os.path.join(full, "_FILESTATS.json")))
+        at_flip.append("file_stats" in self._version_meta(full))
         real(self, name, cur_base, version_dir)
 
     monkeypatch.setattr(merge.TableStore, "_flip_pointer", spy)
@@ -6224,8 +6238,7 @@ def test_partitioned_create_flips_with_file_stats(spark, tmp_path,
     store.declare_partitioning("m", keys=["k"], n_buckets=4)
     store.merge("m", df, ["k"], policy="scd1")
     assert at_flip == [True, True, True]
-    with open(os.path.join(store.current_path("t"), "_FILESTATS.json")) as f:
-        stats = _json.load(f)
+    stats = store._version_meta(store.current_path("t"))["file_stats"]
     assert stats["key"] == "k"
     assert len(stats["files"]) == store.detail("t")["num_files"]
 
@@ -6309,7 +6322,7 @@ def test_deletion_vectors_merge_on_read(spark, tmp_path):
     # full OPTIMIZE materializes the filter everywhere and purges the DV
     store.optimize("t")
     cur = store.current_path("t")
-    assert store._load_dv(cur) == {}
+    assert store._version_meta(cur).get("dv", {}) == {}
     got2 = {r["k"]: r["v"] for r in store.read("t").collect()}
     assert got2 == got
 
@@ -6407,16 +6420,27 @@ _SEG_A_MUTATORS = {
 }
 
 
+def _metadata_documents(version_full):
+    """A version dir's ``_*.json`` files other than the skipping
+    sidecars — the commit record ``_OP.json`` should be the only one."""
+    return {
+        f
+        for f in os.listdir(version_full)
+        if f.startswith("_")
+        and f.endswith(".json")
+        and not f.startswith(("_BLOOM.", "_MINMAX."))
+    }
+
+
 @pytest.mark.parametrize("mutator", sorted(_SEG_A_MUTATORS))
 def test_partition_scoped_commit_carries_dv_and_version_files(
     spark, tmp_path, mutator
 ):
     """Every partition-scoped mutator commits through the same path:
     rows delete_vectored removed from a partition the mutation only
-    hard-links stay deleted, and the new version holds the same
-    per-version files as its parent, with fresh commit info."""
-    import json as _json
-
+    hard-links stay deleted, and the new version holds one metadata
+    document, its commit record, with the same version state keys as
+    its parent's and fresh commit info."""
     store = merge.TableStore(spark, str(tmp_path), keep_versions=4)
     base = spark.createDataFrame(
         [Row(k=i, seg="A" if i % 2 == 0 else "B", v=i) for i in range(20)]
@@ -6443,25 +6467,70 @@ def test_partition_scoped_commit_carries_dv_and_version_files(
             os.path.join(parent, "seg=B", fname),
             os.path.join(cur, "seg=B", fname),
         )
-    assert any(rel.startswith("seg=B/") for rel in store._load_dv(cur))
+    assert any(
+        rel.startswith("seg=B/") for rel in store._version_meta(cur)["dv"]
+    )
 
-    version_files = {
-        "_SCHEMA.json", "_OP.json", "_REWRITTEN.json", "_FILESTATS.json",
-        "_DV.json",
-    }
-    assert version_files <= set(os.listdir(parent))
-    assert version_files <= set(os.listdir(cur))
-    with open(os.path.join(cur, "_OP.json")) as f:
-        rec = _json.load(f)
+    assert _metadata_documents(parent) == {"_OP.json"}
+    assert _metadata_documents(cur) == {"_OP.json"}
+    state_keys = {"schema", "rewritten", "based_on", "file_stats", "dv"}
+    assert state_keys <= set(store._version_meta(parent))
+    assert state_keys <= set(store._version_meta(cur))
+    rec = store._commit_record(cur)
     assert rec["n_files"] == sum(
         1 for _r, _d, fs in os.walk(cur) for fn in fs
         if fn.endswith(".parquet")
     )
     assert rec["bytes"] > 0
-    with open(os.path.join(cur, "_REWRITTEN.json")) as f:
-        rw = _json.load(f)
+    rw = rec["meta"]
     assert rw["rewritten"] == ["seg=A"]
     assert rw["based_on"] == os.path.basename(parent)
+
+
+def test_every_commit_kind_writes_one_version_document(spark, tmp_path):
+    """write, a changelog rename_column (the schema break), restore
+    and a shallow and a deep clone of a table carrying a deletion
+    vector each leave the commit record as the version's only
+    metadata document; the clones read the source's rows."""
+    store = merge.TableStore(spark, str(tmp_path), keep_versions=8)
+    df = spark.createDataFrame([Row(k=i, v=i) for i in range(6)])
+
+    store.write("w", df)
+    assert _metadata_documents(store.current_path("w")) == {"_OP.json"}
+
+    store.enable_changelog("c")
+    store.write("c", df)
+    store.rename_column("c", "v", "val")
+    cur = store.current_path("c")
+    assert _metadata_documents(cur) == {"_OP.json"}
+    assert store._version_meta(cur)["break"] == store.schema_break_version(
+        "c"
+    ) > 0
+
+    base = spark.createDataFrame(
+        [Row(k=i, seg="A" if i % 2 == 0 else "B", v=i) for i in range(20)]
+    )
+    store.write_partitioned("t", base, keys=["k"], partition_column="seg")
+    assert store.delete_vectored("t", F.col("k") == 1) == 1
+    with_dv = store.current_path("t")
+    store.merge("t", spark.createDataFrame([Row(k=0, seg="A", v=100)]),
+                ["k"], policy="scd1")
+    store.restore("t", os.path.basename(with_dv))
+    restored = store.current_path("t")
+    assert _metadata_documents(restored) == {"_OP.json"}
+    src_rows = sorted(store.read("t").collect())
+    got = {r["k"]: r["v"] for r in src_rows}
+    assert 1 not in got and got[0] == 0 and len(got) == 19
+
+    for dst, deep in (("shallow", False), ("deep", True)):
+        store.clone("t", dst, deep=deep)
+        cur = store.current_path(dst)
+        assert _metadata_documents(cur) == {"_OP.json"}
+        # a deep clone's files are copies: its DV carries verbatim
+        assert store._version_meta(cur)["dv"] == store._version_meta(
+            restored
+        )["dv"]
+        assert sorted(store.read(dst).collect()) == src_rows
 
 
 def test_check_constraint_concurrent_adds_all_survive(spark, tmp_path):
@@ -6500,8 +6569,6 @@ def test_optimize_rebases_over_disjoint_concurrent_merge(spark, tmp_path):
     DISJOINT-partition merge REBASES instead of discarding the whole
     compaction job on the CAS miss — at 1000 trickle writers,
     compaction racing merges is the steady state."""
-    import json as _json
-    import os as _os
 
     store = merge.TableStore(spark, str(tmp_path), keep_versions=8)
     base = spark.createDataFrame(
@@ -6550,11 +6617,9 @@ def test_optimize_rebases_over_disjoint_concurrent_merge(spark, tmp_path):
         != _partition_file_map(snap)["seg=A"]
     )
     # ... as a rebase, and the rebased commit KEPT its neutral flag
-    with open(_os.path.join(cur, merge.TableStore._OPFILE)) as f:
-        rec = _json.load(f)
+    rec = store._commit_record(cur)
     assert rec["op"] == "optimize" and rec.get("rebased_onto")
-    with open(_os.path.join(cur, merge.TableStore._REWRITTENFILE)) as f:
-        rw = _json.load(f)
+    rw = rec["meta"]
     assert rw.get("neutral") is True and rw["rewritten"] == ["seg=A"]
 
 

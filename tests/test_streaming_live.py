@@ -407,3 +407,24 @@ def test_run_waves_stops_the_wave_and_resets_the_pool(spark, tmp_path):
     active = {q.id for q in spark.streams.active}
     assert not active & {q.id for q in started}
     assert sc.getLocalProperty("spark.scheduler.pool") is None
+
+
+@pytest.mark.parametrize(
+    "step, table",
+    [
+        ("build_user_bins_incremental", "user_profile"),
+        ("build_gold_incremental", "workout_bpm"),
+    ],
+)
+def test_change_feed_step_times_out(spark, tmp_path, step, table):
+    """A change-feed dimension step that outlives its timeout raises
+    and leaves no query running, instead of returning while its
+    stream still maintains the table."""
+    pipe = FitbitPipeline(spark, str(tmp_path), incremental_dims=True)
+    ids = spark.range(50).withColumnRenamed("id", "user_id")
+    pipe.store.write("users", ids)
+    pipe.store.write(table, ids)
+    active = {q.id for q in spark.streams.active}
+    with pytest.raises(TimeoutError, match="did not drain"):
+        getattr(pipe, step)(0.001)
+    assert {q.id for q in spark.streams.active} == active
